@@ -220,32 +220,11 @@ def main() -> None:
         spark.sparkContext.setLogLevel("ERROR")
         rebuilds += 1
 
-    # SPARK_GRAFT_GC_BOUNDARY=1: collect python + JVM garbage after
-    # each query so the ContextCleaner reclaims finished queries'
-    # checkpoint blocks (r9 verdict #5's "capture the 31% safely" —
-    # only UNREACHABLE blocks are freed, so family caches and live
-    # lineage are untouched by construction; see
-    # checkpoint.release_dead_blocks).
-    gc_boundary = os.environ.get("SPARK_GRAFT_GC_BOUNDARY") == "1"
-    # SPARK_GRAFT_GC_FAMILY=1: same dead-block release, but only when
-    # the run crosses a FAMILY-module boundary (~25 times per full
-    # run instead of 403) — the r11 verdict's middle arm between
-    # per-query GC (+9%, rejected) and never (checkpoint litter grows
-    # for the whole session). Off by default pending the A/B.
-    gc_family = os.environ.get("SPARK_GRAFT_GC_FAMILY") == "1"
-    if gc_boundary or gc_family:
-        from etl_pyspark_spark.checkpoint import release_dead_blocks
-
     rebuilds = 0
-    prev_family: str | None = None
     timings: dict[str, float] = {}
     for name, fn in QUERIES.items():
         if (only and name not in only) or name in skip:
             continue
-        family = getattr(fn, "__module__", "")
-        if gc_family and prev_family is not None and family != prev_family:
-            release_dead_blocks(spark)
-        prev_family = family
         for attempt in (0, 1):
             try:
                 samples = []
@@ -255,8 +234,6 @@ def main() -> None:
                     samples.append(time.perf_counter() - t0)
                 samples.sort()
                 timings[name] = round(samples[len(samples) // 2], 3)
-                if gc_boundary:
-                    release_dead_blocks(spark)
                 break
             except Exception as exc:  # pragma: no cover - surfaced in JSON
                 if attempt == 0 and _ctx_dead():

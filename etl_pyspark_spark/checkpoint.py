@@ -1,74 +1,69 @@
-"""Checkpoint storage policy for iterative operators.
+"""Storage levels and cache lifetimes: the one module that decides how
+long any cached DataFrame in the engine lives.
 
-Every iterative operator (PageRank, hash-min components, BPE rounds,
-BFS hops, gap-fill sweeps...) truncates lineage with
-``localCheckpoint``. Spark's default level for those blocks is
-MEMORY_AND_DISK **deserialized**, which has two scale problems the
-round-8 100x full-registry run hit head-on:
+Storage levels
+--------------
+``DISK_CKPT`` (DISK_ONLY) is the level of every ``localCheckpoint``
+that truncates lineage in the iterative operators (PageRank, hash-min
+components, BPE rounds, BFS hops...). Checkpoint blocks never occupy
+heap and read back from disk per use: a long session's dead blocks
+cannot fill the unified memory region, and disk read-back never
+re-promotes blocks into the heap (the deserialized and serialized
+memory levels both ran a full-registry 100x run out of memory through
+that re-promotion; BASELINE.md round 9 has the measured table).
 
-1. checkpoint blocks from every finished query stay in the unified
-   memory region until the ContextCleaner gets to them, so a long
-   session's heap fills with dead blocks, and
-2. when memory pressure pushes blocks to disk, every read-back goes
-   through ``BlockManager.maybeCacheDiskValuesInMemory`` — which
-   re-promotes the block into the heap as deserialized Java objects.
-   With 32 tasks concurrently re-promoting 100x-sized rank tables the
-   80 GB heap OOMed (GCLocker retry storm -> executor OOM -> the
-   SparkContext shut down mid-run).
+``FAMILY_CACHE`` (MEMORY_AND_DISK, serialized) is the level of every
+``persist`` of a reused intermediate: compact bytes, graceful eviction,
+no deserialized re-promotion on disk read-back.
 
-DISK_ONLY removes both: blocks never occupy heap, read-back streams
-from disk per use, and the cost at fixture scale is milliseconds. On
-a real cluster this is the same judgment as writing iterative
-intermediates to local SSD instead of caching them deserialized —
-predictable memory beats re-read latency for lineage-truncation
-blocks that are each read a handful of times.
+Scopes
+------
+*Query scope.* ``scoped_persist`` caches a within-query intermediate
+(two join sides, a probe plus a totals fold) and registers it;
+``drain_scoped_caches`` releases everything registered so far. The
+``query()`` decorator (``queries/core.py``) drains at the entry of the
+next top-level query, when the previous query's action has consumed
+its caches. Without the drain a 403-query session kept ~60 stale
+cached plans that every later compilation walked.
+
+*Session scope.* ``session_memo`` builds a value once per
+(Spark application, fixture fingerprint, stage) and hands the same
+value to every later caller in the session: the dedup family's shared
+stages (``dedup/shared.py``) and the co-purchase edge table with its
+edge count (``queries/_shared.py``). A new session or regenerated
+fixture data gives a new key, so the value is rebuilt. Each stage name
+keeps at most ``_MEMO_PER_STAGE`` entries; the oldest is evicted
+first. Eviction unpersists persisted frames and only drops the
+reference to ``localCheckpoint``-backed ones: their lineage is
+truncated, so freeing the blocks under a still-live consumer would
+leave it neither data nor a recipe. The ContextCleaner reclaims those
+blocks once the last reference is gone.
+
+The two scopes share Spark's CacheManager, which matches cached plans
+by result, not by DataFrame object: unpersisting a query-scoped frame
+releases ANY cache of the same plan. So the drain never releases a
+plan that a session memo entry holds: ``scoped_persist`` does not
+register a plan the memo already caches, and a new memo entry takes
+over the registrations of its plans made earlier in the query. The
+check runs at registration and memo build, never in the drain, and
+only while the memo holds persisted frames. The cache stays with the
+memo until the memo evicts it.
 """
 
 from __future__ import annotations
 
-import os
+from typing import Callable
 
+from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
-#: storage level for every localCheckpoint in the engine.
-#: SPARK_GRAFT_CKPT_LEVEL=mem_disk_ser switches to SERIALIZED
-#: memory+disk for A/B runs (r08 verdict #6). The round-9 A/B settled
-#: it: serialized blocks ARE cheaper to re-read (100x pagerank solo:
-#: 265 s vs 385 s) and sf0.1 is a wash, but a FULL-registry 100x run
-#: under mem_disk_ser died of java.lang.OutOfMemoryError (GCLocker
-#: retry storm) ~90 min in — serialized bytes still re-promote into
-#: the unified region on every disk read-back, and 240+ queries of
-#: dead-block litter fill the heap exactly like the r8 deserialized
-#: OOM. DISK_ONLY is the only level with a PROVEN clean full 100x
-#: run; it stays the default (measured table in BASELINE.md round 9).
-DISK_CKPT = (
-    StorageLevel.MEMORY_AND_DISK
-    if os.environ.get("SPARK_GRAFT_CKPT_LEVEL") == "mem_disk_ser"
-    else StorageLevel.DISK_ONLY
-)
+DISK_CKPT = StorageLevel.DISK_ONLY
 
-#: storage level for reused family-stage caches (dedup shared builds,
-#: minhash signatures, shingle tables, rank spines): SERIALIZED
-#: memory+disk. ``df.cache()`` defaults to MEMORY_AND_DISK_DESER,
-#: whose disk read-back goes through the same
-#: ``maybeCacheDiskValuesInMemory`` re-promotion that OOMed the 100x
-#: run; the serialized level stores compact bytes (~3-5x smaller),
-#: evicts gracefully, and never re-deserializes into the store.
 FAMILY_CACHE = StorageLevel.MEMORY_AND_DISK
 
 
-# --- query-scoped cache registry (round-12 session-pressure fix) -----
-# A 403-query session used to leave every within-query persist()
-# registered in the CacheManager forever: ~60+ live InMemoryRelations
-# by the tail of a full run, each holding storage blocks AND a large
-# analyzed plan that every LATER query's compilation walks during
-# cache lookup. Measured effect: late-session queries ran 1.5-5x their
-# solo-warm times (r11 verdict #1). These caches are strictly
-# within-query reuse (two join sides, a probe + totals fold), dead the
-# moment the query's action finishes — so the query() decorator drains
-# them at the NEXT query's entry. Session-lifetime memo caches (the
-# dedup family's shared stages, the co-purchase edge cache) never
-# register here and are untouched by construction.
+# --- query scope ------------------------------------------------------
+
 _SCOPED: list = []
 
 
@@ -76,12 +71,11 @@ def scoped_persist(df, level=None):
     """persist() a within-query intermediate and register it for
     release at the next query boundary (see drain_scoped_caches).
 
-    A plan that is ALREADY cached (a session memo stage, or a
-    plan-identical cache from the current query) is returned as-is and
-    NOT registered: draining it would yank a cache some later consumer
-    legitimately shares."""
+    A frame that is ALREADY cached is returned as-is and NOT
+    registered: its owner decides when it is released. That includes
+    a plan a session memo entry caches through another DataFrame."""
     try:
-        if df.is_cached:
+        if df.is_cached or _memo_caches_plan(df):
             return df
     except Exception:
         pass
@@ -98,13 +92,7 @@ def scoped_family_persist(df):
 def drain_scoped_caches() -> int:
     """Unpersist every scoped cache registered since the last drain;
     returns how many were released. Safe at any time: unpersist never
-    breaks correctness (consumers recompute from lineage), and the
-    engine only calls it at query boundaries where the previous
-    query's action has already consumed its caches. Disable with
-    SPARK_GRAFT_NO_DRAIN=1 (A/B arm)."""
-    if os.environ.get("SPARK_GRAFT_NO_DRAIN") == "1":
-        _SCOPED.clear()
-        return 0
+    breaks correctness (consumers recompute from lineage)."""
     n = 0
     while _SCOPED:
         df = _SCOPED.pop()
@@ -116,32 +104,82 @@ def drain_scoped_caches() -> int:
     return n
 
 
-def release_dead_blocks(spark) -> None:
-    """Nudge the ContextCleaner at a pipeline/query boundary — the
-    SAFE capture of the r9 checkpoint-litter finding.
+def _cache_entry(df):
+    """The CacheManager entry (a Scala ``Option``) serving ``df``'s
+    plan, whichever DataFrame persisted it."""
+    jspark = df.sparkSession._jsparkSession
+    return jspark.sharedState().cacheManager().lookupCachedData(df._jdf)
 
-    A long session accumulates localCheckpoint blocks from finished
-    queries; they are only reclaimed when the ContextCleaner's
-    reference queue sees their RDD objects become unreachable, which
-    on a driver that never pressures its own old-gen can lag hundreds
-    of queries (the r9 100x A/B measured 31% on a storage-level change
-    that was NOT safe — mem_disk_ser OOMed the full run). Explicitly
-    unpersisting checkpoint RDDs is unsafe in general: lineage is
-    truncated, so a later recompute of any still-referenced descendant
-    (an evicted family cache, a retried task) would find neither data
-    nor a recipe. Collecting the PYTHON garbage first (dropping py4j
-    proxies) and then requesting a JVM GC makes exactly the
-    UNREACHABLE blocks eligible — the cleaner then unpersists them
-    asynchronously, and anything still referenced survives by
-    construction.
 
-    Cost: one driver JVM GC (~0.1-1 s on a large heap); gate behind
-    ``SPARK_GRAFT_GC_BOUNDARY=1`` where latency matters (bench does).
-    """
-    import gc
+def _memo_caches_plan(df) -> bool:
+    """``df``'s plan is cached while the session memo holds persisted
+    frames in its application. Without such frames the CacheManager
+    is not asked, so sessions without a persisted memo stage pay
+    nothing."""
+    app = df.sparkSession.sparkContext.applicationId
+    if not any(
+        key[0] == app and any(f.is_cached for f in _frames(value))
+        for key, value in _MEMO.items()
+    ):
+        return False
+    return _cache_entry(df).isDefined()
 
-    gc.collect()
+
+def _unregister_memo_plans(value) -> None:
+    """Drop the scoped registrations that cache a plan of the new memo
+    value's persisted frames: the memo owns that cache from now on."""
+    held = [_cache_entry(f) for f in _frames(value) if f.is_cached]
+    held = [h for h in held if h.isDefined()]
+    if held:
+        _SCOPED[:] = [
+            df
+            for df in _SCOPED
+            if not any(_cache_entry(df).equals(h) for h in held)
+        ]
+
+
+# --- session scope ----------------------------------------------------
+
+_MEMO: dict[tuple, object] = {}
+# Entries kept per stage name. A long session touches several fixtures
+# (sf0.001/0.01/0.1, scale smokes); two lets the test suite interleave
+# its unit and oracle fixtures without rebuilding. The cap is per
+# stage, not per fixture group: the dedup stages key on the documents
+# fingerprint and the edges on lineitem's, so a shared group cap would
+# evict one family whenever the other ran.
+_MEMO_PER_STAGE = 2
+
+
+def session_memo(spark, sf_dir: str, table: str, stage: str, build: Callable):
+    """``build()`` once per (application, fingerprint of ``table`` in
+    ``sf_dir``, ``stage``); later calls return the same value. The
+    value is a DataFrame or a tuple holding DataFrames; ``build``
+    persists (at FAMILY_CACHE) or checkpoints them itself."""
+    from etl_pyspark_spark.sources.io import fixture_fingerprint
+
+    key = (
+        spark.sparkContext.applicationId,
+        fixture_fingerprint(sf_dir, table),
+        stage,
+    )
+    if key in _MEMO:
+        return _MEMO[key]
+    same_stage = [k for k in _MEMO if k[2] == stage]
+    while len(same_stage) >= _MEMO_PER_STAGE:
+        for f in _frames(_MEMO.pop(same_stage.pop(0))):
+            if f.is_cached:
+                try:
+                    f.unpersist(blocking=False)
+                except Exception:
+                    pass
+    value = _MEMO[key] = build()
     try:
-        spark.sparkContext._jvm.System.gc()
+        _unregister_memo_plans(value)
     except Exception:
         pass
+    return value
+
+
+def _frames(value) -> list:
+    items = value if isinstance(value, tuple) else (value,)
+    return [v for v in items if isinstance(v, DataFrame)]

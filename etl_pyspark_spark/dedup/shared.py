@@ -12,10 +12,11 @@ family pays each stage once — the same economics as materializing the
 shingle/pair tables to the lake between pipeline steps at 100 TB
 (where these would be checkpointed parquet, not executor cache).
 
-Memo keys include the Spark ``applicationId`` (a new session
-re-derives everything) and the fixture fingerprint from
-``sources/io.fixture_fingerprint`` (regenerated fixture data
-invalidates the memo — same staleness rule as the layout markers).
+Each stage is a ``checkpoint.session_memo`` entry keyed on the Spark
+``applicationId`` (a new session re-derives everything), the
+``documents`` fixture fingerprint (regenerated fixture data
+invalidates the memo — same staleness rule as the layout markers) and
+the stage name; that module also owns eviction.
 
 Every cached stage is a derived artifact (int64 hashes, id pairs,
 labels — never raw text), orders of magnitude smaller than the
@@ -26,11 +27,10 @@ session itself can handle.
 from __future__ import annotations
 
 import os
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from etl_pyspark_spark.checkpoint import FAMILY_CACHE
+from etl_pyspark_spark.checkpoint import FAMILY_CACHE, session_memo
 
 # --- set-dictionary broadcast gate -------------------------------------
 # The shingle-pair verify stages stream candidates through lookups of
@@ -96,62 +96,20 @@ def corpus_bytes_of(sf_dir: str, table: str = "documents") -> int | None:
     except Exception:
         return None
 
-_CACHE: dict[tuple, DataFrame] = {}
-# Keep stages for at most this many distinct (app, fixture) groups; a
-# long session touches several fixtures (sf0.001/0.01/0.1 + scale
-# smokes) and each group pins ~5 cached stages — evict the oldest
-# group's blocks instead of growing executor storage for the app's
-# lifetime.  Two groups lets the test suite interleave its unit and
-# oracle fixtures without thrash.
-_CACHE_MAX_GROUPS = 2
-
-
-def _evict_stale_groups(new_group: tuple) -> None:
-    groups: list[tuple] = []
-    for k in _CACHE:
-        if k[:2] not in groups:
-            groups.append(k[:2])
-    while len(groups) >= _CACHE_MAX_GROUPS and new_group not in groups:
-        victim = groups.pop(0)
-        for k in [k for k in _CACHE if k[:2] == victim]:
-            try:
-                _CACHE.pop(k).unpersist(blocking=False)
-            except Exception:
-                pass
-
-
-def _memo(
-    spark: SparkSession,
-    sf_dir: str,
-    stage: str,
-    builder: Callable[[], DataFrame],
-) -> DataFrame:
-    from etl_pyspark_spark.sources.io import fixture_fingerprint
-
-    key = (
-        spark.sparkContext.applicationId,
-        fixture_fingerprint(sf_dir, "documents"),
-        stage,
-    )
-    df = _CACHE.get(key)
-    if df is None:
-        _evict_stale_groups(key[:2])
-        df = builder().persist(FAMILY_CACHE)
-        _CACHE[key] = df
-    return df
-
-
 def shingle_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, h60): 60-bit hashes of distinct word-3-gram shingles
     of ``documents`` — the root intermediate of the whole family."""
     from etl_pyspark_spark.dedup.minhash import hashed_shingles
     from etl_pyspark_spark.sources.io import read_table
 
-    return _memo(
+    return session_memo(
         spark,
         sf_dir,
+        "documents",
         "shingle_hashes",
-        lambda: hashed_shingles(read_table(spark, sf_dir, "documents")),
+        lambda: hashed_shingles(read_table(spark, sf_dir, "documents")).persist(
+            FAMILY_CACHE
+        ),
     )
 
 
@@ -197,9 +155,10 @@ def _hash_sets_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
             .withColumn("n_sh", F.size("hs"))
+            .persist(FAMILY_CACHE)
         )
 
-    return _memo(spark, sf_dir, "hash_sets_ordered", build)
+    return session_memo(spark, sf_dir, "documents", "hash_sets_ordered", build)
 
 
 def doc_hash_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -242,9 +201,9 @@ def verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             threshold=0.5,
             sh=shingle_hashes(spark, sf_dir),
             sets=doc_hash_sets(spark, sf_dir),
-        )
+        ).persist(FAMILY_CACHE)
 
-    return _memo(spark, sf_dir, "verified_pairs", build)
+    return session_memo(spark, sf_dir, "documents", "verified_pairs", build)
 
 
 def dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -253,11 +212,14 @@ def dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     session, not once per consuming query."""
     from etl_pyspark_spark.dedup.components import connected_components
 
-    return _memo(
+    return session_memo(
         spark,
         sf_dir,
+        "documents",
         "dup_components",
-        lambda: connected_components(verified_pairs(spark, sf_dir)),
+        lambda: connected_components(verified_pairs(spark, sf_dir)).persist(
+            FAMILY_CACHE
+        ),
     )
 
 
@@ -267,11 +229,14 @@ def simhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_pyspark_spark.dedup.simhash import simhash
     from etl_pyspark_spark.sources.io import read_table
 
-    return _memo(
+    return session_memo(
         spark,
         sf_dir,
+        "documents",
         "simhash_sigs",
-        lambda: simhash(read_table(spark, sf_dir, "documents")),
+        lambda: simhash(read_table(spark, sf_dir, "documents")).persist(
+            FAMILY_CACHE
+        ),
     )
 
 

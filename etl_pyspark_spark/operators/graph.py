@@ -22,8 +22,6 @@ more than the 12th decimal at 100 TB.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from etl_pyspark_spark.checkpoint import DISK_CKPT
@@ -43,9 +41,7 @@ DAMP_NUM, DAMP_DEN = 85, 100  # d = 0.85 as an exact ratio
 #: gate — the planner's own estimates flip these joins to SortMergeJoin
 #: far too early because the rank table is a fresh checkpoint each
 #: round.
-_PR_BCAST_MAX_NODES = int(
-    os.environ.get("SPARK_GRAFT_PR_BROADCAST_MAX_NODES", "2000000")
-)
+_PR_BCAST_MAX_NODES = 2_000_000
 
 #: r12 (r11 verdict #3 / the r11 cc-gate negative result): node count
 #: alone is the wrong pay condition. The broadcast arm saves a
@@ -59,12 +55,8 @@ _PR_BCAST_MAX_NODES = int(
 #: shuffle+sort latency (pagerank_iterative, 150 nodes, |E|≈2|V|:
 #: 1.33 s broadcast vs 2.08 s shuffle in the r11 driver bench), so
 #: tiny graphs always take the broadcast arm.
-_PR_BCAST_MIN_RATIO = float(
-    os.environ.get("SPARK_GRAFT_PR_BROADCAST_MIN_RATIO", "8")
-)
-_PR_BCAST_TINY_NODES = int(
-    os.environ.get("SPARK_GRAFT_PR_BROADCAST_TINY_NODES", "65536")
-)
+_PR_BCAST_MIN_RATIO = 8.0
+_PR_BCAST_TINY_NODES = 65_536
 
 
 def _pr_use_broadcast(n_nodes: int, n_edges: int) -> bool:

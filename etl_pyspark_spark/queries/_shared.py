@@ -20,12 +20,13 @@ Contents:
   (``_ensure_skipping_lineitem``, ``_ensure_deflate_sizes``,
   ``_ensure_orders_mixed_spec``).
 - the memoized co-purchase edge build shared by six graph queries
-  (``_copurchase_edges`` + its session cache and real-count table).
+  (``_copurchase_edges`` and ``_copurchase_edge_count``, one session
+  memo entry).
 """
 
 from __future__ import annotations
 
-from etl_pyspark_spark.checkpoint import DISK_CKPT
+from etl_pyspark_spark.checkpoint import DISK_CKPT, session_memo
 
 from etl_pyspark_spark.queries.core import (
     DataFrame,
@@ -178,89 +179,52 @@ def _copurchase_edges_sql() -> str:
         ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey)"""
 
 
-_EDGE_CACHE: dict[tuple, DataFrame] = {}
-_EDGE_COUNTS: dict[tuple, int] = {}
-# A long session touches several fixtures (sf0.001/0.01/0.1 + scale
-# smokes); keep only the most recent ones so superseded checkpoint
-# blocks are unpersisted and their driver references dropped (the
-# ContextCleaner frees the JVM-side blocks once unreferenced) instead
-# of pinning block-manager memory for the app's lifetime.
-_EDGE_CACHE_MAX = 2
+def _copurchase_edge_memo(spark: SparkSession, sf_dir: str) -> tuple:
+    """(edges, edge count) of the sharded part co-purchase graph
+    (u < v, distinct), the same derivation graph_triangle_count
+    documents; baskets are truncated to MAX_BASKET items by the shared
+    hash-rank cap (operators/baskets) before the pair self-join, so a
+    mega-basket is O(cap^2) pairs; eagerly checkpointed because every
+    caller fans it into several join subtrees.
 
-
-def _edge_cache_put(key: tuple, edges: DataFrame) -> None:
-    # Eviction = dropping the dict reference, nothing more. The cached
-    # frames are localCheckpoint-backed, and unpersist() on a
-    # checkpointed plan is a CacheManager no-op (the RDD blocks are
-    # not registered there) — and if it ever did free them, a still-
-    # live consumer could not recompute (lineage truncated) and would
-    # die with checkpoint-block-not-found (advice r06). Once the last
-    # Python/JVM reference goes, the ContextCleaner reclaims the
-    # checkpoint blocks.
-    while len(_EDGE_CACHE) >= _EDGE_CACHE_MAX:
-        oldest = next(iter(_EDGE_CACHE))
-        _EDGE_CACHE.pop(oldest)
-        _EDGE_COUNTS.pop(oldest, None)
-    _EDGE_CACHE[key] = edges
-
-
-def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sharded part co-purchase edge list (u < v, distinct), the same
-    derivation graph_triangle_count documents; baskets are truncated
-    to MAX_BASKET items by the shared hash-rank cap
-    (operators/baskets) before the pair self-join, so a mega-basket
-    is O(cap^2) pairs; eagerly checkpointed because every caller fans
-    it into several join subtrees.
-
-    Memoized per (session, fixture) exactly like the dedup family's
-    shared stages (dedup/shared.py): six graph queries (triangles,
+    A session memo entry (checkpoint.session_memo) exactly like the
+    dedup family's shared stages: six graph queries (triangles,
     k-core, local clustering, BFS, link prediction) derive from this
     one edge table, and before round 5 each rebuilt it from the
     lineitem scan — the materialized edge list is the checkpointed
     artifact a production graph pipeline writes once per ingest."""
     from etl_pyspark_spark.operators.baskets import capped_basket_pairs
-    from etl_pyspark_spark.sources.io import fixture_fingerprint
 
-    key = (
-        spark.sparkContext.applicationId,
-        fixture_fingerprint(sf_dir, "lineitem"),
-    )
-    cached = _EDGE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    # ONE basket aggregate + in-row double explode replaces the
-    # distinct + hash-rank window + self-join chain (identical pair
-    # set — see capped_basket_pairs): one membership exchange instead
-    # of two plus a join, no per-key sort
-    edges = (
-        capped_basket_pairs(
-            read_table(spark, sf_dir, "lineitem").where(
-                F.col("l_orderkey") % 10 == 0
-            ),
-            "l_orderkey",
-            "l_partkey",
-            out_a="u",
-            out_b="v",
+    def build() -> tuple:
+        # ONE basket aggregate + in-row double explode replaces the
+        # distinct + hash-rank window + self-join chain (identical
+        # pair set — see capped_basket_pairs): one membership exchange
+        # instead of two plus a join, no per-key sort
+        edges = (
+            capped_basket_pairs(
+                read_table(spark, sf_dir, "lineitem").where(
+                    F.col("l_orderkey") % 10 == 0
+                ),
+                "l_orderkey",
+                "l_partkey",
+                out_a="u",
+                out_b="v",
+            )
+            .select("u", "v")
+            .distinct()
+            .localCheckpoint(storageLevel=DISK_CKPT)
         )
-        .select("u", "v")
-        .distinct()
-        .localCheckpoint(storageLevel=DISK_CKPT)
-    )
-    # one count against the just-checkpointed edges (cheap — no
-    # recompute) so consumers can pick physical join strategies from
-    # REAL cardinality instead of planner estimates, AQE-style
-    _EDGE_COUNTS[key] = edges.count()
-    _edge_cache_put(key, edges)
-    return edges
+        # one count against the just-checkpointed edges (cheap — no
+        # recompute) so consumers can pick physical join strategies
+        # from REAL cardinality instead of planner estimates, AQE-style
+        return edges, edges.count()
+
+    return session_memo(spark, sf_dir, "lineitem", "copurchase_edges", build)
+
+
+def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _copurchase_edge_memo(spark, sf_dir)[0]
 
 
 def _copurchase_edge_count(spark: SparkSession, sf_dir: str) -> int:
-    from etl_pyspark_spark.sources.io import fixture_fingerprint
-
-    key = (
-        spark.sparkContext.applicationId,
-        fixture_fingerprint(sf_dir, "lineitem"),
-    )
-    if key not in _EDGE_COUNTS:
-        _copurchase_edges(spark, sf_dir)
-    return _EDGE_COUNTS[key]
+    return _copurchase_edge_memo(spark, sf_dir)[1]

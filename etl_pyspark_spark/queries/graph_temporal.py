@@ -16,13 +16,9 @@ from etl_pyspark_spark.queries.core import (
 from etl_pyspark_spark.functions.compat import pround
 from etl_pyspark_spark.queries.text_analysis import _WS_TOKENS_SQL
 from etl_pyspark_spark.queries._shared import (  # noqa: F401
-    _EDGE_CACHE,
-    _EDGE_CACHE_MAX,
-    _EDGE_COUNTS,
     _copurchase_edge_count,
     _copurchase_edges,
     _copurchase_edges_sql,
-    _edge_cache_put,
 )
 
 # ---------------------------------------------------------------------------
@@ -33,8 +29,8 @@ from etl_pyspark_spark.queries._shared import (  # noqa: F401
 _KCORE_K = 4
 _KCORE_ROUNDS = 5
 
-# co-purchase edge build + session cache moved to queries._shared
-# (r07 verdict #4); re-imported above for historical import sites.
+# co-purchase edge build moved to queries._shared (r07 verdict #4);
+# re-imported above for historical import sites.
 
 
 def _kcore_oracle(k: int, rounds: int) -> str:

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pandas as pd
+
 from etl_pyspark_spark.queries.core import (
     DataFrame,
     F,
@@ -386,13 +388,13 @@ def q_pandas_udf_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-vectorized scalar pandas_udf (numpy log/sigmoid over whole
     batches — the ~10-100x-faster-than-row-Python path). Deterministic
     float64 math, so DuckDB replays it exactly."""
-    import pandas as pd
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-    # no type hints: registry uses `from __future__ import annotations`,
-    # which stringifies them beyond pandas_udf's resolver
-    @pandas_udf("double", PandasUDFType.SCALAR)
-    def score(text):
+    # the hints are strings (`from __future__ import annotations`);
+    # pandas_udf resolves them against this module's globals, hence the
+    # module-level pandas import
+    @pandas_udf("double")
+    def score(text: pd.Series) -> pd.Series:
         import numpy as np
 
         n_chars = text.str.len().astype("float64")

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pandas as pd
+
 from etl_pyspark_spark.checkpoint import scoped_persist
 
 from etl_pyspark_spark.queries.core import (
@@ -471,12 +473,12 @@ def q_grouped_median_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-exact. Scale note: a grouped-agg pandas UDF materializes
     each group in one worker — fine for bounded group counts like
     event types; use approx sketches when groups can be huge."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-    # explicit GROUPED_AGG: hint-based inference needs pandas importable
-    # from the module globals where annotations resolve
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
-    def lower_median(v):
+    # Series -> scalar hints infer GROUPED_AGG; they resolve against
+    # this module's globals, hence the module-level pandas import
+    @pandas_udf("double")
+    def lower_median(v: pd.Series) -> float:
         s = v.sort_values().reset_index(drop=True)
         return float(s.iloc[(len(s) - 1) // 2])
 

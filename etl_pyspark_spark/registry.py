@@ -137,10 +137,6 @@ from etl_pyspark_spark.queries.graph_temporal import (  # noqa: F401
     _KCORE_K,
     _KCORE_ROUNDS,
     _copurchase_edges_sql,
-    _EDGE_CACHE,
-    _EDGE_COUNTS,
-    _EDGE_CACHE_MAX,
-    _edge_cache_put,
     _copurchase_edges,
     _copurchase_edge_count,
     _kcore_oracle,

@@ -29,8 +29,6 @@ generation is provably intra-cluster."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -44,9 +42,7 @@ from etl_pyspark_spark.similarity.cosine import as_double, cosine
 #: crossJoin + window shape takes over (a 100k-centroid codebook does
 #: not belong in a plan literal). 1024 centroids x 64 dims is ~0.5 MB
 #: of literals — well under any plan-size concern.
-_CENTROID_INLINE_MAX = int(
-    os.environ.get("SPARK_GRAFT_CENTROID_INLINE_MAX", "1024")
-)
+_CENTROID_INLINE_MAX = 1024
 
 
 def assign_nearest_centroid(
@@ -72,20 +68,26 @@ def assign_nearest_centroid(
     the negated id breaks ties toward the LOWEST centroid id.
     ``extra_cols`` passes input columns through (a caller that needs
     the vector alongside the label skips a join back). Past
-    ``_CENTROID_INLINE_MAX`` centroids the crossJoin + window shape
-    takes over unchanged."""
+    ``_CENTROID_INLINE_MAX`` centroids, for an empty codebook and for
+    non-integral centroid ids the crossJoin + window shape takes over
+    unchanged."""
     # ONE bounded action decides the gate AND fetches the codebook:
     # collect at most MAX+1 centroids — an overflowing row means "too
-    # many to inline" and the window arm takes over.
-    rows = (
-        centroids.select(
-            F.col(id_col).alias("_cid"),
-            as_double(F.col(vec_col)).alias("_cv"),
+    # many to inline" and the window arm takes over. So does an empty
+    # codebook (an array of zero structs has no type) and a
+    # non-integral id, which the inline arm cannot negate.
+    cid_type = dict(centroids.dtypes)[id_col]
+    rows = []
+    if cid_type in ("tinyint", "smallint", "int", "bigint"):
+        rows = (
+            centroids.select(
+                F.col(id_col).alias("_cid"),
+                as_double(F.col(vec_col)).alias("_cv"),
+            )
+            .limit(_CENTROID_INLINE_MAX + 1)
+            .collect()
         )
-        .limit(_CENTROID_INLINE_MAX + 1)
-        .collect()
-    )
-    if len(rows) <= _CENTROID_INLINE_MAX:
+    if 0 < len(rows) <= _CENTROID_INLINE_MAX:
         rows = sorted(rows, key=lambda r: r["_cid"])
         # UNROLLED per-centroid sim columns (k is known at plan time),
         # not a transform() over an array of centroids: an outer HOF
@@ -139,7 +141,6 @@ def assign_nearest_centroid(
                 for r in rows
             ]
         )
-        cid_type = dict(centroids.dtypes)[id_col]
         return (
             emb.withColumn("_nv", nv)
             .withColumn("_best", F.array_max(sims))

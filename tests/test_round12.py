@@ -4,7 +4,8 @@ Pins the three behavior-preserving mechanisms this round added:
 
 - the query-boundary scoped-cache drain (checkpoint.scoped_persist /
   drain_scoped_caches, wired into the query() decorator) — the
-  session-pressure fix;
+  session-pressure fix — and its rule that the drain never releases a
+  plan the session memo (checkpoint.session_memo) holds;
 - the two-pass exact_discrete_quantiles (the below-count and totals
   scans folded into one checkpointed tagged aggregate) — asserted by
   COUNTING input evaluations with an accumulator UDF, not by trusting
@@ -17,6 +18,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -52,20 +54,100 @@ def test_query_boundary_drains_previous_scoped_caches(spark, sf_dir):
     assert all(not h.is_cached for h in handles)
 
 
-def test_memo_family_caches_survive_query_boundary(spark, sf_dir):
-    """The dedup family's session memo stages must NOT be drained:
-    they persist through dedup/shared._memo, never through
-    scoped_persist."""
+def _cache_manager_holds(spark, df) -> bool:
+    """Spark's CacheManager still serves ``df``'s plan (``is_cached`` is
+    only a Python-side flag and cannot see another frame's unpersist)."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    return cm.lookupCachedData(df._jdf).isDefined()
+
+
+@pytest.mark.parametrize(
+    "stage",
+    [
+        "shingle_hashes",
+        "_hash_sets_ordered",
+        "verified_pairs",
+        "dup_components",
+        "simhash_sigs",
+        "_copurchase_edges",
+    ],
+)
+def test_memo_family_caches_survive_query_boundary(spark, sf_dir, stage):
+    """Session memo stages must NOT be drained at a query boundary:
+    the same frame comes back, and every dedup stage is still
+    persisted with its CacheManager entry intact. The co-purchase
+    edges are localCheckpoint-backed, never persisted."""
     from etl_pyspark_spark import checkpoint as ckpt
-    from etl_pyspark_spark.dedup.shared import shingle_hashes
+    from etl_pyspark_spark.dedup import shared
+    from etl_pyspark_spark.queries import _shared
     from etl_pyspark_spark.registry import QUERIES
 
-    sh = shingle_hashes(spark, sf_dir)
-    sh.count()  # materialize the memo stage
-    assert sh.is_cached
+    get = getattr(shared, stage, None) or getattr(_shared, stage)
+    df = get(spark, sf_dir)
+    n = df.count()  # materialize the memo stage
     QUERIES["filter_project"](spark, sf_dir)  # boundary drain fires
-    assert sh.is_cached
+    assert get(spark, sf_dir) is df
+    persisted = stage != "_copurchase_edges"
+    assert df.is_cached == persisted
+    if persisted:
+        assert _cache_manager_holds(spark, df)
+    assert df.count() == n
     ckpt.drain_scoped_caches()
+
+
+def test_drain_keeps_plan_shared_with_memo(spark, sf_dir):
+    """verified_near_duplicates scoped-persists the same shingle plan
+    that shingle_hashes memoizes; Spark matches cached plans by result,
+    so the drain used to release the memo's cache while the memo kept
+    handing the frame out. Both orders: the scoped persist before the
+    memo builds the stage, and after."""
+    from etl_pyspark_spark import checkpoint as ckpt
+    from etl_pyspark_spark.dedup.minhash import verified_near_duplicates
+    from etl_pyspark_spark.dedup.shared import shingle_hashes
+    from etl_pyspark_spark.sources.io import read_table
+
+    for key in [k for k in ckpt._MEMO if k[2] == "shingle_hashes"]:
+        ckpt._MEMO.pop(key).unpersist()
+    docs = read_table(spark, sf_dir, "documents")
+    verified_near_duplicates(docs)
+    sh = shingle_hashes(spark, sf_dir)
+    sh.count()
+    ckpt.drain_scoped_caches()
+    assert _cache_manager_holds(spark, sh)
+    verified_near_duplicates(docs)
+    ckpt.drain_scoped_caches()
+    assert _cache_manager_holds(spark, sh)
+
+
+def test_session_memo_evicts_per_stage(spark, tmp_path):
+    """At most two entries per stage name, oldest first; persisted
+    entries are unpersisted, and other stages are untouched."""
+    from etl_pyspark_spark import checkpoint as ckpt
+
+    dirs = [str(tmp_path / f"f{i}") for i in range(3)]
+    other = ckpt.session_memo(
+        spark, dirs[0], "t", "_test_other", lambda: spark.range(1)
+    )
+    frames = [
+        ckpt.session_memo(
+            spark,
+            d,
+            "t",
+            "_test_stage",
+            lambda: spark.range(5).persist(ckpt.FAMILY_CACHE),
+        )
+        for d in dirs
+    ]
+    try:
+        held = [v for k, v in ckpt._MEMO.items() if k[2] == "_test_stage"]
+        assert [id(v) for v in held] == [id(f) for f in frames[1:]]
+        assert not frames[0].is_cached
+        assert all(f.is_cached for f in frames[1:])
+        again = ckpt.session_memo(spark, dirs[0], "t", "_test_other", None)
+        assert again is other
+    finally:
+        for k in [k for k in ckpt._MEMO if k[2].startswith("_test_")]:
+            ckpt._MEMO.pop(k).unpersist()
 
 
 # --- two-pass exact quantiles -------------------------------------------
@@ -169,6 +251,51 @@ def test_assign_nearest_centroid_ties_and_nulls(spark):
     }
     assert out[10][0] == 0  # tie broken toward the lowest centroid id
     assert out[11] == (0, None)  # all-NULL sims: lowest id, NULL sim
+
+
+def test_assign_nearest_centroid_empty_codebook(spark):
+    """An empty codebook takes the window arm and labels nothing (an
+    inlined array of zero structs fails at analysis)."""
+    from pyspark.sql import Row
+
+    from etl_pyspark_spark.similarity.semantic import (
+        assign_nearest_centroid,
+    )
+
+    emb = spark.createDataFrame(
+        [Row(vec_id=0, embedding=[1.0, 0.0]), Row(vec_id=1, embedding=[0.0, 1.0])]
+    )
+    assert assign_nearest_centroid(emb, emb.where(emb.vec_id < 0)).count() == 0
+
+
+def test_assign_nearest_centroid_string_ids_match_window_arm(spark, monkeypatch):
+    """Non-integral centroid ids cannot be negated for the inline
+    tie-break: they take the window arm and label exactly as it does."""
+    from pyspark.sql import Row
+
+    from etl_pyspark_spark.similarity import semantic
+
+    rows = [
+        Row(vec_id=0, embedding=[1.0, 0.0]),
+        Row(vec_id=1, embedding=[0.0, 1.0]),
+        Row(vec_id=10, embedding=[1.0, 1.0]),  # exact tie
+        Row(vec_id=11, embedding=[0.0, 0.0]),  # zero norm
+    ]
+    emb = spark.createDataFrame(rows)
+    cents = emb.where(emb.vec_id < 2)
+    named = cents.select(
+        F.concat(F.lit("c"), F.col("vec_id").cast("string")).alias("vec_id"),
+        "embedding",
+    )
+    got = sorted(
+        tuple(r) for r in semantic.assign_nearest_centroid(emb, named).collect()
+    )
+    monkeypatch.setattr(semantic, "_CENTROID_INLINE_MAX", 0)  # window arm
+    want = sorted(
+        (r["vec_id"], f"c{r['centroid_id']}", r["cos_sim"])
+        for r in semantic.assign_nearest_centroid(emb, cents).collect()
+    )
+    assert got == want
 
 
 # --- capped_baskets helper -------------------------------------------------
