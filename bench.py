@@ -38,6 +38,7 @@ def _force(df) -> int:
 
 def _round_phase(
     here: str,
+    scratch: str,
     sf_dir: str,
     t_start: float,
     env_phase: str | None = None,
@@ -54,7 +55,8 @@ def _round_phase(
     round 1) the run is mid-round by definition and must NOT claim the
     clean bench_r1 name — the driver's later closing run owns it.
     ``env_phase`` (SPARK_GRAFT_BENCH_PHASE) overrides both for manual
-    adjudication runs. Pure function of the filesystem snapshot —
+    adjudication runs. ``here`` holds the CORRECTNESS files and
+    ``scratch`` the archives. Pure function of the filesystem snapshot —
     unit-tested in tests/test_contract.py."""
     import glob as _glob
 
@@ -67,9 +69,7 @@ def _round_phase(
         rnd, phase = 1, "midround"
     else:
         mx = max(by_idx)
-        clean = os.path.join(
-            here, ".scratch", f"bench_r{mx}_sf{_sf_of(sf_dir)}.json"
-        )
+        clean = os.path.join(scratch, f"bench_r{mx}_sf{_sf_of(sf_dir)}.json")
         try:
             corr_age = t_start - os.path.getmtime(by_idx[mx])
         except OSError:
@@ -110,6 +110,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from etl_pyspark_spark.registry import QUERIES
     from etl_pyspark_spark.session import get_session
+    from etl_pyspark_spark.sources.layouts import _SCRATCH
 
     spark = get_session(
         app_name="etl-pyspark-spark-bench",
@@ -174,11 +175,9 @@ def main() -> None:
     # Prefer the per-SF archive: bench_last.json is overwritten by
     # EVERY full run at ANY scale factor, so one run at another SF
     # between rounds would otherwise blind the detector (r05 verdict
-    # #3); the .scratch/bench_sf{sf}_last.json copy survives that.
+    # #3); the scratch bench_sf{sf}_last.json copy survives that.
     here = os.path.dirname(os.path.abspath(__file__))
-    sf_last = os.path.join(
-        here, ".scratch", f"bench_sf{_sf_of(sf_dir)}_last.json"
-    )
+    sf_last = os.path.join(_SCRATCH, f"bench_sf{_sf_of(sf_dir)}_last.json")
     prev: dict[str, float] = {}
     candidates = [os.path.join(here, "bench_last.json"), sf_last]
     env_prev = os.environ.get("SPARK_GRAFT_BENCH_PREV")
@@ -285,7 +284,7 @@ def main() -> None:
     # Round key + run phase for the durable archive — extracted to
     # the unit-tested _round_phase (r08 verdict #7).
     rnd, phase = _round_phase(
-        here, sf_dir, t_start, os.environ.get("SPARK_GRAFT_BENCH_PHASE")
+        here, _SCRATCH, sf_dir, t_start, os.environ.get("SPARK_GRAFT_BENCH_PHASE")
     )
 
     total = round(sum(t for t in timings.values() if t >= 0), 4)
@@ -321,11 +320,9 @@ def main() -> None:
     # per-query record the jitter detector diffs against — default its
     # file output to a scratch path instead.
     default_out = (
-        os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                     ".scratch", "bench_only_last.json")
+        os.path.join(_SCRATCH, "bench_only_last.json")
         if only
-        else os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                          "bench_last.json")
+        else os.path.join(here, "bench_last.json")
     )
     out_path = os.environ.get("SPARK_GRAFT_BENCH_OUT", default_out)
     # a bare filename has dirname "" — makedirs("") raises, and losing
@@ -352,14 +349,14 @@ def main() -> None:
         stem = f"bench_r{rnd}_sf{_sf_of(sf_dir)}" + (
             "_midround" if phase == "midround" else ""
         )
-        arch = os.path.join(here, ".scratch", f"{stem}.json")
+        arch = os.path.join(_SCRATCH, f"{stem}.json")
         k = 2
         while os.path.exists(arch):
-            arch = os.path.join(here, ".scratch", f"{stem}_rerun{k}.json")
+            arch = os.path.join(_SCRATCH, f"{stem}_rerun{k}.json")
             k += 1
         with open(arch, "w") as fh:
             fh.write(line + "\n")
-        # ... and a GIT-TRACKED copy (r08 verdict #3): .scratch/ does
+        # ... and a GIT-TRACKED copy (r08 verdict #3): scratch does
         # not survive rounds and BENCH_r*.json truncates to a tail, so
         # cross-round per-query regression diffs were impossible from
         # git alone. bench_records/ keeps the full per-query record of

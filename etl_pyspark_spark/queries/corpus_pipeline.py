@@ -20,7 +20,11 @@ from etl_pyspark_spark.queries.text_analysis import (
     _WS_TOKENS_SQL,
     _sql_str_list,
 )
-from etl_pyspark_spark.queries.io_lake import _SCRATCH
+from etl_pyspark_spark.sources.layouts import (
+    _SCRATCH,
+    ensure_range_clustered_lineitem,
+    ensure_zorder_lineitem,
+)
 
 # ---------------------------------------------------------------------------
 # Embedding compression: scalar int8 quantization (similarity/quantize.py)
@@ -645,46 +649,6 @@ def q_python_datasource_docgen(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def ensure_zorder_lineitem(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per fixture fingerprint) the Z-ordered lineitem
-    copy. Split out of the query so the bench warm-up pays the
-    ingest-time rewrite untimed and ``zorder_layout`` times the pruned
-    SCAN — the operator's actual point (advice r02 #3)."""
-    from etl_pyspark_spark.sources.io import (
-        fixture_fingerprint,
-        marker_current,
-        write_marker,
-        write_zordered,
-    )
-
-    dst = f"{_SCRATCH}/zorder_lineitem"
-    marker = f"{dst}/.built_for"
-    want = fixture_fingerprint(sf_dir, "lineitem")
-    if not marker_current(marker, want):
-        li = read_table(spark, sf_dir, "lineitem")
-        day = F.datediff(F.col("l_shipdate"), F.lit("1992-01-01"))
-        # The Morton interleave uses the low 16 bits of each dimension.
-        # Quantize any dimension whose max overflows that (shiftright
-        # by excess bit-length — integer-exact, order-preserving) so
-        # large partkeys keep 2-D locality instead of silently
-        # truncating to their low 16 bits (advice r02). One tiny
-        # build-time agg; shift 0 == no-op at small sf.
-        mx = li.agg(
-            F.max(day).alias("a"), F.max("l_partkey").alias("b")
-        ).first()
-        sh_a = max(0, int(mx["a"] or 0).bit_length() - 16)
-        sh_b = max(0, int(mx["b"] or 0).bit_length() - 16)
-        write_zordered(
-            li,
-            dst,
-            F.shiftright(day.cast("bigint"), sh_a),
-            F.shiftright(F.col("l_partkey").cast("bigint"), sh_b),
-            num_files=8,
-        )
-        write_marker(marker, want)
-    return dst
-
-
 @query(
     "zorder_layout",
     oracle=f"""
@@ -714,27 +678,6 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_lines"),
         dec_sum(F.col("l_extendedprice"), "total_price"),
     )
-
-
-def ensure_range_clustered_lineitem(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per fixture fingerprint) the range-clustered
-    lineitem copy — pay-once ingest layout, untimed in bench warm-up
-    so the query times the pruned scan."""
-    from etl_pyspark_spark.sources.io import (
-        fixture_fingerprint,
-        marker_current,
-        write_marker,
-        write_range_clustered,
-    )
-
-    dst = f"{_SCRATCH}/range_clustered_lineitem"
-    marker = f"{dst}/.built_for"
-    want = fixture_fingerprint(sf_dir, "lineitem")
-    if not marker_current(marker, want):
-        li = read_table(spark, sf_dir, "lineitem")
-        write_range_clustered(li, dst, "l_shipdate", num_files=8)
-        write_marker(marker, want)
-    return dst
 
 
 @query(

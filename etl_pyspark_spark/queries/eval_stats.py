@@ -20,13 +20,13 @@ from etl_pyspark_spark.queries.text_analysis import (
     _ngram_sql,
     _sql_str_list,
 )
-from etl_pyspark_spark.queries._shared import (  # noqa: F401
-    _ORACLE_SF,
-    _SCRATCH,
-    _ensure_deflate_sizes,
-    _ensure_skipping_lineitem,
+from etl_pyspark_spark.queries._shared import _ORACLE_SF
+from etl_pyspark_spark.sources.layouts import (
+    deflate_sizes_dir,
+    ensure_deflate_sizes,
+    ensure_skipping_lineitem,
+    skipping_lineitem_dir,
 )
-from etl_pyspark_spark.queries.widening_r3 import ensure_layouts
 from etl_pyspark_spark.queries.semdedup_tokenizer import _EQUIDEPTH_BINS
 
 # ---------------------------------------------------------------------------
@@ -2142,8 +2142,6 @@ def q_histogram_merge_quantiles(
     )
 
 
-# _ensure_skipping_lineitem moved to queries._shared (r07 verdict #4)
-
 _SKIP_LO = "1997-03-01 00:00:00"
 _SKIP_HI = "1997-06-01 00:00:00"
 
@@ -2156,7 +2154,7 @@ _SKIP_HI = "1997-06-01 00:00:00"
              min(l_shipdate) AS fmin, max(l_shipdate) AS fmax,
              count(*) AS n_rows
       FROM read_parquet(
-        '{_SCRATCH}/skipping_lineitem_{_ORACLE_SF}/*.parquet',
+        '{skipping_lineitem_dir(_ORACLE_SF)}/*.parquet',
         filename = true)
       GROUP BY filename),
     m AS (SELECT filename, n_rows,
@@ -2188,7 +2186,7 @@ def q_layout_skipping_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet files, so the report is exactly checkable; the layout
     lives in a per-SF directory so a bench at another scale can't
     invalidate the files the oracle path names."""
-    dst = _ensure_skipping_lineitem(spark, sf_dir)
+    dst = ensure_skipping_lineitem(spark, sf_dir)
     back = spark.read.parquet(dst).select(
         F.input_file_name().alias("fname"), "l_shipdate"
     )
@@ -2220,9 +2218,6 @@ def q_layout_skipping_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# _ensure_deflate_sizes moved to queries._shared (r07 verdict #4)
-
-
 @query(
     "text_compression_ratio",
     # Promoted from rows-only (r05 verdict #6): deflate output is
@@ -2241,7 +2236,7 @@ def q_layout_skipping_report(spark: SparkSession, sf_dir: str) -> DataFrame:
            END AS compression_ratio
     FROM documents d
     JOIN read_parquet(
-      '{_SCRATCH}/deflate_sizes_{_ORACLE_SF}/sizes.parquet') s
+      '{deflate_sizes_dir(_ORACLE_SF)}/sizes.parquet') s
       USING (doc_id)
     """,
 )
@@ -2259,7 +2254,7 @@ def q_text_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     compresses far below the corpus norm. The query self-ensures the
     oracle's precomputed size table (untimed in bench via
     ensure_layouts)."""
-    _ensure_deflate_sizes(sf_dir)
+    ensure_deflate_sizes(sf_dir)
     docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )

@@ -14,21 +14,14 @@ from etl_pyspark_spark.queries.core import (
     query,
     read_table,
 )
-from etl_pyspark_spark.queries._shared import (  # noqa: F401
-    _ORACLE_SF,
-    _SCRATCH,
-    _register_views,
-)
+from etl_pyspark_spark.queries._shared import _register_views
+from etl_pyspark_spark.sources.layouts import _SCRATCH, ensure_orders_by_year
 
 # ---------------------------------------------------------------------------
 # IO round-trips: the reference's scatter/process/gather file pipeline
 # (SURVEY §2.1 S1-S8, §2.5) re-expressed as distributed sinks/scans —
 # typed parquet end-to-end, no pandas text hop (S6/S7 anti-pattern).
 # ---------------------------------------------------------------------------
-
-# _SCRATCH / _ORACLE_SF moved to queries._shared (r07 verdict #4);
-# re-imported above so every historical import site keeps resolving.
-
 
 @query(
     "pipeline_roundtrip",
@@ -509,31 +502,6 @@ def q_dedup_latest_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _ensure_orders_by_year(spark: SparkSession, sf_dir: str) -> str:
-    """Hive-partitioned orders layout under scratch — written once per
-    sf_dir (marker file), so repeat queries time the pruned SCAN, not
-    the one-time layout build (same pay-once pattern as bucketing)."""
-    from etl_pyspark_spark.sources.io import (
-        fixture_fingerprint,
-        marker_current,
-        write_marker,
-        write_parquet,
-    )
-
-    out = f"{_SCRATCH}/orders_by_year"
-    marker = f"{out}/.built_for"
-    want = fixture_fingerprint(sf_dir, "orders")
-    if not marker_current(marker, want):
-        o = read_table(spark, sf_dir, "orders")
-        write_parquet(
-            o.withColumn("order_year", F.year("o_orderdate")),
-            out,
-            partition_by=["order_year"],
-        )
-        write_marker(marker, want)
-    return out
-
-
 @query(
     "partitioned_layout_pruning",
     oracle="""
@@ -550,7 +518,7 @@ def q_partitioned_layout_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     difference between scanning one partition and scanning the lake."""
     from etl_pyspark_spark.sources.io import read_parquet
 
-    out = _ensure_orders_by_year(spark, sf_dir)
+    out = ensure_orders_by_year(spark, sf_dir)
     return (
         read_parquet(spark, out)
         .where(F.col("order_year") == 1996)
@@ -586,7 +554,7 @@ def q_dpp_join_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     though no literal predicate mentions them."""
     from etl_pyspark_spark.sources.io import read_parquet
 
-    out = _ensure_orders_by_year(spark, sf_dir)
+    out = ensure_orders_by_year(spark, sf_dir)
     facts = read_parquet(spark, out)
     # dim built from parquet (not a local relation, which would
     # constant-fold): distinct years, filtered AFTER the join is

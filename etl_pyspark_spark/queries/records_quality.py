@@ -15,7 +15,7 @@ from etl_pyspark_spark.queries.core import (
     sql_pround,
 )
 from etl_pyspark_spark.queries.text_analysis import _WS_TOKENS_SQL, _ngram_sql
-from etl_pyspark_spark.queries.io_lake import _SCRATCH
+from etl_pyspark_spark.sources.layouts import _SCRATCH
 from etl_pyspark_spark.queries.graph_temporal import (
     _copurchase_edge_count,
     _copurchase_edges,

@@ -14,11 +14,11 @@ from etl_pyspark_spark.queries.core import (
     sql_pround,
 )
 from etl_pyspark_spark.queries.text_analysis import _WS_TOKENS_SQL
-from etl_pyspark_spark.queries.io_lake import _ORACLE_SF, _SCRATCH
-from etl_pyspark_spark.queries.eval_stats import (
-    _SKIP_HI,
-    _SKIP_LO,
-    _ensure_skipping_lineitem,
+from etl_pyspark_spark.queries._shared import _ORACLE_SF
+from etl_pyspark_spark.queries.eval_stats import _SKIP_HI, _SKIP_LO
+from etl_pyspark_spark.sources.layouts import (
+    ensure_skipping_lineitem,
+    skipping_lineitem_dir,
 )
 from etl_pyspark_spark.queries.graph_temporal import (
     _copurchase_edge_count,
@@ -951,7 +951,7 @@ def q_embedding_label_outliers(
                  AND l_discount > 0.05) AS BIGINT) AS n_rows_deleted,
              CAST(count(*) AS BIGINT) AS n_rows_total
       FROM read_parquet(
-        '{_SCRATCH}/skipping_lineitem_{_ORACLE_SF}/*.parquet',
+        '{skipping_lineitem_dir(_ORACLE_SF)}/*.parquet',
         filename = true)
       GROUP BY 1)
     SELECT file_name, n_rows_total, n_rows_deleted,
@@ -976,7 +976,7 @@ def q_cow_delete_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     skipping layout so Spark and the oracle read the same physical
     files (the layout_skipping_report convention). No reference
     counterpart (SURVEY §2.9 lake-maintenance family)."""
-    dst = _ensure_skipping_lineitem(spark, sf_dir)
+    dst = ensure_skipping_lineitem(spark, sf_dir)
     back = spark.read.parquet(dst).select(
         F.element_at(F.split(F.input_file_name(), "/"), -1).alias(
             "file_name"
@@ -1126,7 +1126,7 @@ def q_listagg_order_report(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(stats_max_value AS BIGINT) AS max_orderkey,
            CAST(stats_null_count AS BIGINT) AS n_nulls
     FROM parquet_metadata(
-      '{_SCRATCH}/skipping_lineitem_{_ORACLE_SF}/*.parquet')
+      '{skipping_lineitem_dir(_ORACLE_SF)}/*.parquet')
     WHERE path_in_schema = 'l_orderkey'
     """,
 )
@@ -1147,7 +1147,7 @@ def q_parquet_footer_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     physical files."""
     import os as _os
 
-    dst = _ensure_skipping_lineitem(spark, sf_dir)
+    dst = ensure_skipping_lineitem(spark, sf_dir)
     paths = sorted(
         _os.path.join(dst, f)
         for f in _os.listdir(dst)

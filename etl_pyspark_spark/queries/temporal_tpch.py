@@ -18,7 +18,7 @@ from etl_pyspark_spark.queries.core import (
     read_table,
     sql_pround,
 )
-from etl_pyspark_spark.queries.io_lake import _SCRATCH
+from etl_pyspark_spark.sources.layouts import _SCRATCH
 
 # ---------------------------------------------------------------------------
 # Temporal operators (operators/temporal.py): sessionization, SCD2,

@@ -19,11 +19,8 @@ from etl_pyspark_spark.queries.text_analysis import (
     _ngram_sql,
     _sql_str_list,
 )
-from etl_pyspark_spark.queries._shared import (  # noqa: F401
-    _SCRATCH,
-    _copurchase_edges,
-    _ensure_orders_mixed_spec,
-)
+from etl_pyspark_spark.queries._shared import _copurchase_edges
+from etl_pyspark_spark.sources.layouts import _SCRATCH, ensure_orders_mixed_spec
 
 # ---------------------------------------------------------------------------
 # Round 3: training-data growth surface — exact substring-duplication
@@ -1924,9 +1921,6 @@ def q_json_corrupt_records_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# _ensure_orders_mixed_spec moved to queries._shared (r07 verdict #4)
-
-
 @query(
     "partition_spec_migration",
     oracle="""
@@ -1953,7 +1947,7 @@ def q_partition_spec_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a two-path union view.)"""
     from etl_pyspark_spark.sources.io import read_parquet
 
-    old_out, new_out = _ensure_orders_mixed_spec(spark, sf_dir)
+    old_out, new_out = ensure_orders_mixed_spec(spark, sf_dir)
     v1 = read_parquet(spark, old_out)
     v2 = read_parquet(spark, new_out)
     unioned = v1.unionByName(v2, allowMissingColumns=True)

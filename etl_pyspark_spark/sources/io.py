@@ -367,34 +367,6 @@ def fixture_fingerprint(sf_dir: str, *tables: str) -> str:
     return "|".join(parts)
 
 
-def marker_current(marker_path: str, want: str) -> bool:
-    try:
-        with open(marker_path) as fh:
-            return fh.read().strip() == want
-    except OSError:
-        return False
-
-
-def write_marker(marker_path: str, want: str) -> None:
-    """Write a layout marker atomically (tmp + rename) so a concurrent
-    reader never observes a half-written marker; since every builder
-    writes its marker only AFTER its layout write completes, the last
-    rename to win the race matches an existing complete layout."""
-    import os
-    import tempfile
-
-    d = os.path.dirname(marker_path)
-    os.makedirs(d, exist_ok=True)
-    fd, tmp = tempfile.mkstemp(dir=d, prefix=".marker.")
-    try:
-        with os.fdopen(fd, "w") as fh:
-            fh.write(want)
-        os.replace(tmp, marker_path)
-    finally:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
-
-
 def zorder_value(col_a, col_b, bits: int = 16):
     """Z-order (Morton) value: interleave the low ``bits`` bits of two
     non-negative integer columns — bit i of A lands at position 2i+1,

@@ -53,6 +53,8 @@ _MEM_IDS = itertools.count()
 # surface.
 LAST_STATE_METRICS: list[dict] = []
 
+_STREAM_PARTITIONS = 8  # see stream_shuffle_partitions
+
 
 @contextmanager
 def stream_shuffle_partitions(spark: SparkSession):
@@ -62,9 +64,8 @@ def stream_shuffle_partitions(spark: SparkSession):
     local runs want few (8), a cluster sizes this to executor count x
     key cardinality. The conf is read at query start, so restoring it
     after ``awaitTermination`` cannot affect the running query."""
-    target = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8")
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", target)
+    spark.conf.set("spark.sql.shuffle.partitions", _STREAM_PARTITIONS)
     try:
         yield
     finally:

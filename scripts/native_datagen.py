@@ -47,15 +47,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from etl_pyspark_spark.session import get_session  # noqa: E402
+from etl_pyspark_spark.sources.layouts import _SCRATCH  # noqa: E402
 
 SF = float(os.environ.get("SPARK_GRAFT_NATIVE_SF", "1.0"))
 DST = os.environ.get(
-    "SPARK_GRAFT_NATIVE_DST",
-    os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        ".scratch",
-        f"sf{SF:g}native",
-    ),
+    "SPARK_GRAFT_NATIVE_DST", os.path.join(_SCRATCH, f"sf{SF:g}native")
 )
 
 N_CUSTOMER = int(150_000 * SF)

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from etl_pyspark_spark.session import get_session  # noqa: E402
 from etl_pyspark_spark.sources.io import read_table  # noqa: E402
+from etl_pyspark_spark.sources.layouts import _SCRATCH  # noqa: E402
 
 # MODE=replicate (default): the round-5 10x smoke, byte-identical to
 # its original output (REP x REP + r key interleave, fixed part/supp
@@ -68,11 +69,7 @@ _BLOCK = 10**9
 SRC = os.environ.get("SPARK_GRAFT_SMOKE_SRC", "/root/testdata/sf0.1")
 DST = os.environ.get(
     "SPARK_GRAFT_SMOKE_DST",
-    os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        ".scratch",
-        f"sf{REP / 10:.1f}grow" if GROW else "sf1.0smoke",
-    ),
+    os.path.join(_SCRATCH, f"sf{REP / 10:.1f}grow" if GROW else "sf1.0smoke"),
 )
 
 

@@ -12,10 +12,12 @@ import os
 import subprocess
 import sys
 
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _entry_module():
     spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py"
+        "__spark_entry__", os.path.join(_REPO, "__spark_entry__.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
@@ -70,12 +72,12 @@ def test_bench_emits_one_json_line(tmp_path):
     # session/layout warm-up slack.
     n_registered = len(_entry_module().queries())
     out = subprocess.run(
-        [sys.executable, "/root/repo/bench.py"],
+        [sys.executable, os.path.join(_REPO, "bench.py")],
         capture_output=True,
         text=True,
         timeout=240 + int(1.5 * n_registered),
         env=env,
-        cwd="/root/repo",
+        cwd=_REPO,
     )
     assert out.returncode == 0, out.stderr[-2000:]
     # the JSON line must be the LAST thing on stdout (the r10 driver
@@ -141,29 +143,29 @@ def test_bench_round_phase_key_derivation(tmp_path):
     import bench
 
     here = str(tmp_path)
+    scratch = tmp_path / "scratch"
     now = _time.time()
     sf = "/x/sf0.1"
 
     # no CORRECTNESS at all: round 1, midround, clean name refused
-    assert bench._round_phase(here, sf, now) == (1, "midround")
+    assert bench._round_phase(here, str(scratch), sf, now) == (1, "midround")
 
     # fresh CORRECTNESS_r3 + free clean name: the closing run of r3
     c3 = tmp_path / "CORRECTNESS_r3.json"
     c3.write_text("{}")
     os.utime(c3, (now - 10, now - 10))
-    assert bench._round_phase(here, sf, now) == (3, "closing")
+    assert bench._round_phase(here, str(scratch), sf, now) == (3, "closing")
 
     # clean archive already claimed: later re-runs are r4 midround
-    scratch = tmp_path / ".scratch"
     scratch.mkdir()
     (scratch / "bench_r3_sf0.1.json").write_text("{}")
-    assert bench._round_phase(here, sf, now) == (4, "midround")
+    assert bench._round_phase(here, str(scratch), sf, now) == (4, "midround")
 
     # stale CORRECTNESS (>15 min before run start): midround of r4
     (scratch / "bench_r3_sf0.1.json").unlink()
     os.utime(c3, (now - 3600, now - 3600))
-    assert bench._round_phase(here, sf, now) == (4, "midround")
+    assert bench._round_phase(here, str(scratch), sf, now) == (4, "midround")
 
     # env override pins closing to the max recorded round
-    assert bench._round_phase(here, sf, now, "closing") == (3, "closing")
-    assert bench._round_phase(here, sf, now, "midround")[1] == "midround"
+    assert bench._round_phase(here, str(scratch), sf, now, "closing") == (3, "closing")
+    assert bench._round_phase(here, str(scratch), sf, now, "midround")[1] == "midround"

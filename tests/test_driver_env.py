@@ -19,6 +19,7 @@ Marked ``slow`` (one JVM, whole registry, ~8 min): deselect with
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 
@@ -59,7 +60,7 @@ def test_driver_env_full_registry_parity():
     out = subprocess.run(
         [sys.executable, "-c", _SWEEP],
         capture_output=True, text=True, timeout=3000,
-        cwd="/root/repo",
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     )
     assert out.returncode == 0, out.stderr[-3000:]
     line = [l for l in out.stdout.splitlines() if l.startswith("RESULT:")]

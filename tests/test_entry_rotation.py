@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import glob
 import importlib.util
+import os
 
 import pytest
 
@@ -27,14 +28,15 @@ from tests.oracle_utils import compare, duckdb_connect
 # (r05 verdict #2): the driver writes one CORRECTNESS_r{N}.json per
 # completed round, so during round N+1 the count IS the current round
 # key — no hand-bumped constant to forget.
-_ROUND = len(glob.glob("/root/repo/CORRECTNESS_r*.json")) + 1
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_ROUND = len(glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json"))) + 1
 _WINDOW = 50
 _WINDOWS_PER_ROUND = 4
 
 
 def _entry_module():
     spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py"
+        "__spark_entry__", os.path.join(_REPO, "__spark_entry__.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

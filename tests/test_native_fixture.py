@@ -16,8 +16,7 @@ fixture**, advancing by round so the whole registry re-verifies on
 the second population every ~10 rounds on top of the full driver-
 fixture sweep in test_oracle.py. Skips when the native fixture has
 not been generated (scratch-only; build with
-``SPARK_GRAFT_NATIVE_SF=0.01 SPARK_GRAFT_NATIVE_DST=\
-.scratch/sf0.01native python scripts/native_datagen.py``).
+``SPARK_GRAFT_NATIVE_SF=0.01 python scripts/native_datagen.py``).
 
 The derived-side-table queries whose oracle paths pin to
 ``$SPARK_GRAFT_ORACLE_SF`` (documented in queries/_shared.py) are
@@ -35,17 +34,18 @@ import pytest
 
 from etl_pyspark_spark.queries._shared import _ORACLE_SF
 from etl_pyspark_spark.registry import ORACLES, QUERIES
+from etl_pyspark_spark.sources.layouts import _SCRATCH
 from tests.oracle_utils import compare, duckdb_connect
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-_NATIVE = os.path.join(_REPO, ".scratch", "sf0.01native")
+_NATIVE = os.path.join(_SCRATCH, "sf0.01native")
 
 
 def _next_round() -> int:
     """1 + the max round number present in CORRECTNESS_r*.json names —
     robust to archived/pruned records (a file COUNT repeats or skips
     rotation windows when records are removed) and to running the
-    suite from a checkout outside /root/repo."""
+    suite from another checkout."""
     rounds = [0]
     for p in glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json")):
         m = re.search(r"CORRECTNESS_r(\d+)\.json$", p)

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from etl_pyspark_spark.plans import plan_of, tree_of
 from etl_pyspark_spark.registry import QUERIES
+from etl_pyspark_spark.sources.layouts import _SCRATCH
 
 
 def test_filter_project_pushdown(spark, oracle_sf_dir):
@@ -131,8 +132,8 @@ def test_compaction_reduces_file_count(spark, oracle_sf_dir):
     import glob
 
     QUERIES["compact_small_files"](spark, oracle_sf_dir).count()
-    src = glob.glob("/root/repo/.scratch/compact_src/part-*.parquet")
-    dst = glob.glob("/root/repo/.scratch/compact_dst/part-*.parquet")
+    src = glob.glob(f"{_SCRATCH}/compact_src/part-*.parquet")
+    dst = glob.glob(f"{_SCRATCH}/compact_dst/part-*.parquet")
     assert len(src) >= 40  # fragmented input really was fragmented
     assert len(dst) <= 4
 
@@ -142,7 +143,7 @@ def test_compaction_is_narrow(spark, oracle_sf_dir):
     from etl_pyspark_spark.plans import shuffle_count
     from etl_pyspark_spark.sources.io import compact_small_files as _  # noqa
 
-    df = spark.read.parquet("/root/repo/.scratch/compact_src").coalesce(4)
+    df = spark.read.parquet(f"{_SCRATCH}/compact_src").coalesce(4)
     assert shuffle_count(df) == 0
 
 
@@ -168,7 +169,7 @@ def test_range_clustered_files_have_disjoint_intervals(spark, oracle_sf_dir):
 
     QUERIES["range_clustered_layout"](spark, oracle_sf_dir).count()
     files = sorted(
-        glob.glob("/root/repo/.scratch/range_clustered_lineitem/part-*.parquet")
+        glob.glob(f"{_SCRATCH}/range_clustered_lineitem/part-*.parquet")
     )
     assert len(files) >= 6  # repartitionByRange(8) modulo empty ranges
     spans = []
@@ -202,7 +203,7 @@ def test_zorder_files_have_2d_locality(spark, oracle_sf_dir):
 
     QUERIES["zorder_layout"](spark, oracle_sf_dir).count()
     files = sorted(
-        glob.glob("/root/repo/.scratch/zorder_lineitem/part-*.parquet")
+        glob.glob(f"{_SCRATCH}/zorder_lineitem/part-*.parquet")
     )
     assert len(files) >= 6
     spans = []

@@ -511,10 +511,8 @@ def test_apportionment_sums_to_budget_exactly(spark):
     invariant floor-proportional allocation (mixture_sampling_quota)
     cannot provide — and never differ from a stratum's floor by more
     than one slot."""
-    from etl_pyspark_spark.registry import (
-        _APPORTION_BUDGET,
-        QUERIES,
-    )
+    from etl_pyspark_spark.queries.graph_temporal import _APPORTION_BUDGET
+    from etl_pyspark_spark.registry import QUERIES
 
     rows = QUERIES["quota_apportionment"](
         spark, "/root/testdata/sf0.01"
@@ -627,7 +625,8 @@ def test_rendezvous_drain_moves_only_drained_shard(spark):
     """HRW's minimal-movement guarantee, asserted: when the last
     shard drains, every one of its residents reassigns and NO
     resident of any surviving shard moves."""
-    from etl_pyspark_spark.registry import _HRW_SHARDS, QUERIES
+    from etl_pyspark_spark.queries.timeseries_entity import _HRW_SHARDS
+    from etl_pyspark_spark.registry import QUERIES
 
     rows = QUERIES["rendezvous_shard_assignment"](
         spark, "/root/testdata/sf0.01"

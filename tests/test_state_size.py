@@ -27,6 +27,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_pyspark_spark.registry import QUERIES
+from etl_pyspark_spark.sources.layouts import _SCRATCH
 
 
 def _state_rows() -> int:
@@ -89,7 +90,7 @@ def test_grow_fixture_state_sizes_scale_with_keys(spark):
     per user, and the join buffer bounded by its input. Skips when
     the grow fixture has not been generated (it is scratch-only;
     build with SPARK_GRAFT_SMOKE_MODE=grow scripts/scale_smoke_gen.py)."""
-    grow = "/root/repo/.scratch/sf3.0grow"
+    grow = os.path.join(_SCRATCH, "sf3.0grow")
     if not os.path.exists(os.path.join(grow, "events.parquet")):
         pytest.skip("30x grow fixture not built")
     from etl_pyspark_spark.sources.io import read_table

@@ -3,6 +3,8 @@ batching-dependent (no SQL oracle possible)."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from etl_pyspark_spark.registry import QUERIES
@@ -173,7 +175,7 @@ print(json.dumps({"surface": surface, "stream_rows": stream.count(),
     out = subprocess.run(
         [sys.executable, "-c", code],
         capture_output=True, text=True, timeout=600,
-        cwd="/root/repo",
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     )
     assert out.returncode == 0, out.stderr[-3000:]
     res = json.loads(out.stdout.strip().splitlines()[-1])
