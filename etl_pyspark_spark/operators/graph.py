@@ -106,9 +106,13 @@ def pagerank_int(
         .agg(F.count(F.lit(1)).alias("od"))
         .localCheckpoint(storageLevel=DISK_CKPT)
     )
-    n_edges = int(
-        outdeg.agg(F.sum("od").alias("m")).collect()[0]["m"] or 0
-    )
+    # |V| alone decides the gate outside (TINY, MAX]; the edge count
+    # job runs only inside that band.
+    n_edges = 0
+    if _PR_BCAST_TINY_NODES < n_nodes <= _PR_BCAST_MAX_NODES:
+        n_edges = int(
+            outdeg.agg(F.sum("od").alias("m")).collect()[0]["m"] or 0
+        )
     small = _pr_use_broadcast(n_nodes, n_edges)
     if small and edges_reusable:
         # attach outdeg per round via broadcast — the |E|-scale join

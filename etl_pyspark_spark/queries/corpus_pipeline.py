@@ -20,6 +20,7 @@ from etl_pyspark_spark.queries.text_analysis import (
     _WS_TOKENS_SQL,
     _sql_str_list,
 )
+from etl_pyspark_spark.sources.io import read_parquet
 from etl_pyspark_spark.sources.layouts import (
     _SCRATCH,
     ensure_range_clustered_lineitem,
@@ -669,7 +670,7 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate on either dimension skips most files. The multi-column
     complement to range_clustered_layout."""
     dst = ensure_zorder_lineitem(spark, sf_dir)
-    back = spark.read.parquet(dst)
+    back = read_parquet(spark, dst)
     return back.where(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
@@ -702,7 +703,7 @@ def q_range_clustered_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     matching files via min/max statistics — the pay-once layout that
     makes every later time-windowed query read ~1/N of the data."""
     dst = ensure_range_clustered_lineitem(spark, sf_dir)
-    back = spark.read.parquet(dst)
+    back = read_parquet(spark, dst)
     return (
         back.where(
             (F.col("l_shipdate") >= F.lit("1997-03-01").cast("timestamp"))

@@ -21,6 +21,7 @@ from etl_pyspark_spark.queries.text_analysis import (
     _sql_str_list,
 )
 from etl_pyspark_spark.queries._shared import _ORACLE_SF
+from etl_pyspark_spark.sources.io import read_parquet
 from etl_pyspark_spark.sources.layouts import (
     deflate_sizes_dir,
     ensure_deflate_sizes,
@@ -2187,7 +2188,7 @@ def q_layout_skipping_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     lives in a per-SF directory so a bench at another scale can't
     invalidate the files the oracle path names."""
     dst = ensure_skipping_lineitem(spark, sf_dir)
-    back = spark.read.parquet(dst).select(
+    back = read_parquet(spark, dst).select(
         F.input_file_name().alias("fname"), "l_shipdate"
     )
     f = back.groupBy("fname").agg(

@@ -35,12 +35,12 @@ def q_pipeline_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the same SQL as reference_pipeline because a parquet
     round trip preserves every type and value (the reference's text
     hop, nyc_taxi_etl.py:110-115, preserved neither)."""
-    from etl_pyspark_spark.sources.io import read_parquet, write_parquet
+    from etl_pyspark_spark.sources.io import write_parquet
 
     out = f"{_SCRATCH}/pipeline_roundtrip"
     df = QUERIES["reference_pipeline"](spark, sf_dir)
     write_parquet(df, out, max_records_per_file=5000)
-    return read_parquet(spark, out)
+    return spark.read.parquet(out)
 
 
 @query(
@@ -290,7 +290,6 @@ def q_stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-id partition dir); the query returns the re-scanned sink.
     This is the streaming->lake shape (what the reference's
     chunk-text-files wanted to be, nyc_taxi_etl.py:105-119)."""
-    from etl_pyspark_spark.sources.io import read_parquet
     from etl_pyspark_spark.streaming.windows import stream_events
 
     out = f"{_SCRATCH}/stream_foreach_batch"
@@ -320,7 +319,7 @@ def q_stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
     shutil.rmtree(f"{out}_ckpt", ignore_errors=True)
-    return read_parquet(spark, out).drop("batch_id")
+    return spark.read.parquet(out).drop("batch_id")
 
 
 # ---------------------------------------------------------------------------

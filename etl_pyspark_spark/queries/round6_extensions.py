@@ -16,6 +16,7 @@ from etl_pyspark_spark.queries.core import (
 from etl_pyspark_spark.queries.text_analysis import _WS_TOKENS_SQL
 from etl_pyspark_spark.queries._shared import _ORACLE_SF
 from etl_pyspark_spark.queries.eval_stats import _SKIP_HI, _SKIP_LO
+from etl_pyspark_spark.sources.io import read_parquet
 from etl_pyspark_spark.sources.layouts import (
     ensure_skipping_lineitem,
     skipping_lineitem_dir,
@@ -977,7 +978,7 @@ def q_cow_delete_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     files (the layout_skipping_report convention). No reference
     counterpart (SURVEY §2.9 lake-maintenance family)."""
     dst = ensure_skipping_lineitem(spark, sf_dir)
-    back = spark.read.parquet(dst).select(
+    back = read_parquet(spark, dst).select(
         F.element_at(F.split(F.input_file_name(), "/"), -1).alias(
             "file_name"
         ),

@@ -47,8 +47,8 @@ def _cpus() -> int:
 #: Runtime-settable SQL confs every engine query depends on. Applied
 #: defensively per query (see sources/io.read_table) because the
 #: *caller* may hand us a session built with Spark 4 defaults (ANSI on
-#: -> division by zero errors; host TZ -> hour() drift; nano parquet
-#: rejected).
+#: -> division by zero errors; host TZ -> hour() drift; TIMESTAMP(NANOS)
+#: parquet rejected).
 RUNTIME_COMPAT_CONF = {
     "spark.sql.ansi.enabled": "false",
     "spark.sql.session.timeZone": "UTC",
@@ -95,11 +95,12 @@ def ensure_compat(spark: SparkSession) -> SparkSession:
     """Pin the runtime confs the engine's semantics rely on.
 
     Failures are LOUD (warning log, once per session): a silently
-    dropped conf is how round 1 shipped the events.ts NTZ bug. Note a
-    successful ``conf.set`` is still no guarantee of *effect* —
-    ``nanosAsLong`` only matters at session build — which is why
-    schema-sensitive code branches on the observed dtype
-    (``sources.io.normalize_event_ts``) instead of trusting confs.
+    dropped conf is how round 1 shipped the events.ts NTZ bug. The
+    confs do not fix a column's surface — ``events.ts`` reads as
+    TIMESTAMP_NTZ with or without ``nanosAsLong``, which only affects
+    TIMESTAMP(NANOS) files — so schema-sensitive code branches on the
+    observed dtype (``sources.io.normalize_event_ts``) instead of
+    trusting confs.
     """
     failed: dict[str, str] = {}
     for k, v in RUNTIME_COMPAT_CONF.items():
@@ -147,9 +148,10 @@ def get_session(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
-        # events.parquet stores TIMESTAMP(NANOS); Spark 4 rejects it
-        # unless nanos are surfaced as epoch-nano longs (we convert to
-        # microsecond timestamps in the reader, matching DuckDB's read)
+        # Spark 4 rejects TIMESTAMP(NANOS) parquet unless nanos are
+        # surfaced as epoch-nano longs (the reader converts them to
+        # microsecond timestamps, matching DuckDB's read); the
+        # fixtures' events.ts is TIMESTAMP(MICROS) and unaffected
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         # local-mode heap: 32 task threads + accumulated caches (the

@@ -30,7 +30,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from etl_pyspark_spark.sources.io import fixture_fingerprint, read_table
+from etl_pyspark_spark.sources.io import (
+    fixture_fingerprint,
+    parquet_schema,
+    read_table,
+)
 from etl_pyspark_spark.sources.layouts import _SCRATCH, pay_once
 
 
@@ -110,7 +114,7 @@ def ensure_bucketed_fixtures(
     for table, _, key in tables:
         if not spark.catalog.tableExists(table):
             path = f"{base_path}/{table}"
-            schema = spark.read.parquet(path).schema
+            schema = parquet_schema(spark, path)
             cols = ", ".join(
                 f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
             )

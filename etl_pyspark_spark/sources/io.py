@@ -25,10 +25,12 @@ every reader returns a lazy DataFrame and every sink is a distributed
 
 from __future__ import annotations
 
+import os
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from etl_pyspark_spark.session import ensure_compat
 
@@ -47,28 +49,94 @@ FIXTURE_TABLES = (
 )
 
 
+#: Parquet reader confs that change the schema Spark infers from the
+#: footers, read at call time: a run-time set of
+#: ``inferTimestampNTZ.enabled=false`` turns ``events.ts`` from
+#: TIMESTAMP_NTZ into TIMESTAMP.
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.mergeSchema",
+)
+#: abspath -> (identity, confs, schema); one entry per path
+_SCHEMA_MEMO: dict[str, tuple] = {}
+
+
+def _parquet_identity(path: str) -> tuple:
+    """``(mtime_ns, size)`` of a file (the ``fixture_fingerprint``
+    rule), or the sorted ``(relpath, mtime_ns, size)`` of a
+    directory-shaped table's parquet files, so a part file rewritten in
+    place changes it too. Raises ``OSError`` if ``path`` is gone."""
+    st = os.stat(path)
+    if not os.path.isdir(path):
+        return (st.st_mtime_ns, st.st_size)
+    files = []
+    for root, _, names in os.walk(path):
+        for f in names:
+            if f.endswith(".parquet"):
+                fp = os.path.join(root, f)
+                fst = os.stat(fp)
+                rel = os.path.relpath(fp, path)
+                files.append((rel, fst.st_mtime_ns, fst.st_size))
+    return tuple(sorted(files))
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, memoized per path.
+
+    Inference runs one Spark job over the footers (0.10-0.15 s per
+    read); a read that passes the memoized schema plans with no job.
+    The entry is replaced when the files' identity or the schema
+    confs (``_SCHEMA_CONFS``) differ, so a rewritten table never gets a
+    stale schema. The key holds no application id: the memo outlives
+    ``spark.stop()`` and serves the next session in the process. A path
+    that cannot be stat'ed skips the memo, so Spark raises its own
+    ``PATH_NOT_FOUND``."""
+    key = os.path.abspath(path)
+    try:
+        ident = _parquet_identity(key)
+    except OSError:
+        return spark.read.parquet(path).schema
+    confs = tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS)
+    hit = _SCHEMA_MEMO.get(key)
+    if hit is not None and hit[:2] == (ident, confs):
+        return hit[2]
+    schema = spark.read.parquet(path).schema
+    _SCHEMA_MEMO[key] = (ident, confs, schema)
+    return schema
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """Distributed parquet scan (reference S2/S5 without the eager
-    ``count()`` job of nyc_taxi_etl.py:43)."""
-    return spark.read.parquet(path)
+    ``count()`` job of nyc_taxi_etl.py:43) of a fixture table or a
+    pay-once layout, with the schema from ``parquet_schema``. Query
+    sinks, rewritten on every call, read with plain
+    ``spark.read.parquet``: their identity never repeats."""
+    return spark.read.schema(parquet_schema(spark, path)).parquet(path)
 
 
 def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
-    """Normalize the events fixture's parquet TIMESTAMP(NANOS) column to
-    a microsecond TIMESTAMP, whatever surface the session's reader gave
-    it. ``spark.sql.legacy.parquet.nanosAsLong`` only takes effect when
-    present at session *build* time — a caller-provided session (the
-    verify driver's, a notebook's) built with Spark 4 defaults surfaces
-    nano parquet as TIMESTAMP_NTZ instead, and setting the conf at
-    runtime does not change that. So branch on the observed dtype:
+    """Normalize an event-time parquet column to a microsecond
+    TIMESTAMP, whatever surface the session's reader gave it. The
+    fixtures store ``events.ts`` as TIMESTAMP(MICROS,
+    isAdjustedToUTC=false); the run-time conf
+    ``spark.sql.parquet.inferTimestampNTZ.enabled`` decides its surface
+    (TIMESTAMP_NTZ by default, TIMESTAMP when false), in a plain session
+    and in one built with ``nanosAsLong`` alike. A TIMESTAMP(NANOS)
+    file, which Spark 4 rejects unless
+    ``spark.sql.legacy.parquet.nanosAsLong`` is set (at build or run
+    time), surfaces as epoch-nano longs. So branch on the observed
+    dtype:
 
-    - ``bigint``        (nanosAsLong took)  -> ``timestamp_micros(ts div
-      1000)``. Integer ``div``: a double ``/ 1000`` would round epoch
+    - ``bigint``        (nano file, nanosAsLong) -> ``timestamp_micros(ts
+      div 1000)``. Integer ``div``: a double ``/ 1000`` would round epoch
       nanos (> 2^53) and shift some timestamps by 1 us.
-    - ``timestamp_ntz`` (Spark 4 default)   -> cast to TIMESTAMP. The
-      reader already truncated nanos to micros; with the session TZ
-      pinned UTC (ensure_compat) the cast is value-identical — verified
-      bit-exact against DuckDB's ``epoch_us`` read.
+    - ``timestamp_ntz`` (Spark 4 default)   -> cast to TIMESTAMP. With
+      the session TZ pinned UTC (ensure_compat) the cast is
+      value-identical — verified bit-exact against DuckDB's
+      ``epoch_us`` read.
     - ``timestamp``     -> already the target surface; no-op.
 
     Every event-time consumer (batch ``read_table`` and streaming
@@ -122,7 +190,6 @@ def _fixture_max_rows(sf_dir: str) -> int:
     exact 100x spill regression the feature exists to prevent, with
     no signal. Missing tables are normal (partial fixtures) and stay
     silent."""
-    import os
     import sys
 
     key = fixture_fingerprint(sf_dir, *FIXTURE_TABLES)
@@ -181,8 +248,6 @@ def _fixture_max_rows(sf_dir: str) -> int:
 def _table_bytes(p: str) -> int:
     """Total on-disk bytes of a file- or directory-shaped table; 0 if
     unreadable (the caller then degrades to an unsized table)."""
-    import os
-
     total = 0
     try:
         if os.path.isdir(p):
@@ -215,8 +280,6 @@ def autosize_shuffle_partitions(spark: SparkSession, sf_dir: str) -> int:
     tests, the external harness) all force each query before building
     the next, so the assumption holds there; an interleaving caller
     should re-call this right before each action."""
-    import os
-
     if os.environ.get("SPARK_GRAFT_SHUFFLE_AUTOSIZE", "1") == "0":
         return 0
     try:
@@ -235,10 +298,9 @@ def autosize_shuffle_partitions(spark: SparkSession, sf_dir: str) -> int:
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver fixture table, e.g. ``read_table(spark, sf, 'lineitem')``.
 
-    ``events.ts`` is TIMESTAMP(NANOS) in parquet; ``normalize_event_ts``
-    maps every reader surface (nano-long, TIMESTAMP_NTZ, TIMESTAMP) to
-    one microsecond TIMESTAMP — the same truncation DuckDB applies on
-    read, so oracles agree.
+    ``normalize_event_ts`` maps every reader surface of ``events.ts``
+    (nano-long, TIMESTAMP_NTZ, TIMESTAMP) to one microsecond TIMESTAMP,
+    the value DuckDB reads, so oracles agree.
 
     ``ensure_compat`` pins ANSI-off/UTC confs because the caller
     (e.g. the verify driver) may pass a session built with Spark 4
@@ -251,7 +313,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     ensure_compat(spark)
     autosize_shuffle_partitions(spark, sf_dir)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if "ts" in df.columns:
         df = normalize_event_ts(df, "ts")
     return df
@@ -354,8 +416,6 @@ def fixture_fingerprint(sf_dir: str, *tables: str) -> str:
     marker on this (not the path alone) means regenerated fixture data
     at the same path triggers a rebuild instead of silently serving a
     stale layout."""
-    import os
-
     parts = [os.path.abspath(sf_dir)]
     for t in tables:
         p = os.path.join(sf_dir, f"{t}.parquet")

@@ -37,17 +37,19 @@ from pyspark.sql import functions as F
 from etl_pyspark_spark.functions import text as T
 from etl_pyspark_spark.functions.compat import pround
 from etl_pyspark_spark.session import ensure_compat
+from etl_pyspark_spark.sources.io import parquet_schema
 from etl_pyspark_spark.streaming.windows import run_to_memory_table
 
 
 def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming scan of the documents fixture (schema from the batch
-    footer — metadata only)."""
+    """Streaming scan of the documents fixture. The schema is the batch
+    reader's (``sources.io.parquet_schema``): inferring it runs one
+    Spark job, which the memo pays once per file and conf set."""
     ensure_compat(spark)
     import os
 
     path = f"{sf_dir}/documents.parquet"
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     if os.path.isdir(path):
         # directory-shaped table (lake layout / grow-mode fixtures):
         # stream the directory — the glob filter below would match

@@ -10,8 +10,8 @@ the DuckDB oracles compute (registry entries ``stream_*``).
 
 Semantics pinned here:
 
-- Event time is the parquet ``ts`` truncated to microseconds (same as
-  the batch reader and DuckDB's nanos->micros read).
+- Event time is the parquet ``ts`` as a microsecond TIMESTAMP (same as
+  the batch reader and DuckDB's read).
 - Tumbling/sliding windows are epoch-aligned (Spark's ``window()``
   default, start ``% slide == 0``).
 - Session windows use a 30-minute inactivity gap; a gap of *exactly*
@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_pyspark_spark.session import ensure_compat
-from etl_pyspark_spark.sources.io import normalize_event_ts
+from etl_pyspark_spark.sources.io import normalize_event_ts, parquet_schema
 
 _MEM_IDS = itertools.count()
 
@@ -73,16 +73,17 @@ def stream_shuffle_partitions(spark: SparkSession):
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming scan of the events fixture (schema from the batch
-    reader's parquet footer — metadata only, no data job).
+    """Streaming scan of the events fixture. The schema is the batch
+    reader's (``sources.io.parquet_schema``): inferring it runs one
+    Spark job, which the memo pays once per file and conf set.
 
-    ``normalize_event_ts`` maps every reader surface of the nano-parquet
-    ``ts`` (bigint from nanosAsLong sessions, TIMESTAMP_NTZ from
-    default-built Spark 4 sessions, TIMESTAMP) to a microsecond
-    TIMESTAMP — ``withWatermark`` requires TIMESTAMP and rejects NTZ."""
+    ``normalize_event_ts`` maps every reader surface of ``ts`` (bigint
+    from a nano file under nanosAsLong, TIMESTAMP_NTZ by Spark 4
+    default, TIMESTAMP) to a microsecond TIMESTAMP — ``withWatermark``
+    requires TIMESTAMP and rejects NTZ."""
     ensure_compat(spark)
     path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     if os.path.isdir(path):
         # directory-shaped table (the real lake layout, and the
         # grow-mode scale fixtures): stream the directory itself —

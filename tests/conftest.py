@@ -24,3 +24,23 @@ def sf_dir() -> str:
 @pytest.fixture(scope="session")
 def oracle_sf_dir() -> str:
     return SF_DIR_ORACLE
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn) -> (fn(), jobs)``: the Spark jobs ``fn``
+    submitted, counted through a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

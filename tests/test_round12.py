@@ -210,6 +210,55 @@ def test_pr_gate_requires_edge_dominance_past_tiny_floor():
     assert not _pr_use_broadcast(3_000_000, 300_000_000)
 
 
+def _pr_reference(n, edges, iterations):
+    """Plain-Python integer PageRank, the arithmetic of pagerank_int."""
+    from etl_pyspark_spark.operators.graph import DAMP_DEN, DAMP_NUM, MASS
+
+    od = {}
+    for s, _ in edges:
+        od[s] = od.get(s, 0) + 1
+    ranks = {v: MASS // n for v in range(n)}
+    base = (DAMP_DEN - DAMP_NUM) * (MASS // n) // DAMP_DEN
+    for _ in range(iterations):
+        csum = {}
+        for s, d in edges:
+            csum[d] = csum.get(d, 0) + ranks[s] // od[s]
+        ranks = {
+            v: base + DAMP_NUM * csum.get(v, 0) // DAMP_DEN for v in range(n)
+        }
+    return ranks
+
+
+def test_pr_tiny_graph_skips_edge_count_job(spark, count_jobs, monkeypatch):
+    """|V| alone decides the gate on a tiny graph, so the build skips
+    the |E| aggregate: one action fewer than a run that must count
+    edges (the gate widened to need |E| while still choosing the same
+    broadcast arm), with identical ranks. AQE runs that one action as
+    a shuffle-map job plus a result job."""
+    from etl_pyspark_spark.operators import graph
+
+    n = 150
+    pairs = sorted(
+        {(i, (i + 1) % n) for i in range(n)}
+        | {(i, (7 * i + 3) % n) for i in range(n)}
+    )
+    nodes = spark.range(n).select(F.col("id").alias("node"))
+    edges = spark.createDataFrame(pairs, "src bigint, dst bigint")
+
+    def build():
+        return graph.pagerank_int(nodes, edges, iterations=3)
+
+    ranks, jobs = count_jobs(build)
+    monkeypatch.setattr(graph, "_PR_BCAST_TINY_NODES", 0)
+    monkeypatch.setattr(graph, "_PR_BCAST_MIN_RATIO", 0.0)
+    counted, counted_jobs = count_jobs(build)
+
+    assert counted_jobs - jobs == 2, (jobs, counted_jobs)
+    got = {r["node"]: r["rank_int"] for r in ranks.collect()}
+    assert got == {r["node"]: r["rank_int"] for r in counted.collect()}
+    assert got == _pr_reference(n, pairs, 3)
+
+
 # --- centroid assignment: zero-exchange argmax -----------------------------
 
 

@@ -137,11 +137,11 @@ def test_watermark_drops_late_rows(spark, tmp_path):
 
 def test_event_ts_ntz_surface_end_to_end():
     """Exactly the round-1 driver scenario: a session built with Spark 4
-    DEFAULTS (no nanosAsLong -> events.ts surfaces as TIMESTAMP_NTZ)
-    must still run event-time queries, both streaming (withWatermark
-    rejects NTZ) and batch, with values matching the nanos-long path.
-    Needs its own JVM because nanosAsLong is build-time-only — hence a
-    subprocess."""
+    DEFAULTS (events.ts, TIMESTAMP(MICROS) without UTC adjustment,
+    surfaces as TIMESTAMP_NTZ) must still run event-time queries, both
+    streaming (withWatermark rejects NTZ) and batch, with stream and
+    batch agreeing. Runs in its own JVM so no conf the engine's own
+    session was built with can leak in — hence a subprocess."""
     import json
     import subprocess
     import sys
