@@ -85,16 +85,11 @@ def dict_hint(dict_df: DataFrame, corpus_bytes: int | None) -> DataFrame:
 
 
 def corpus_bytes_of(sf_dir: str, table: str = "documents") -> int | None:
-    """On-disk bytes of a fixture table (parquet footer walk), None if
-    unreadable — the measurement ``dict_hint`` gates on."""
-    import os as _os
-
+    """On-disk bytes of a fixture table, None if unreadable — the
+    measurement ``dict_hint`` gates on."""
     from etl_pyspark_spark.sources.io import _table_bytes
 
-    try:
-        return _table_bytes(_os.path.join(sf_dir, f"{table}.parquet")) or None
-    except Exception:
-        return None
+    return _table_bytes(os.path.join(sf_dir, f"{table}.parquet")) or None
 
 def shingle_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, h60): 60-bit hashes of distinct word-3-gram shingles

@@ -44,14 +44,18 @@ def _cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
-#: Runtime-settable SQL confs every engine query depends on. Applied
-#: defensively per query (see sources/io.read_table) because the
-#: *caller* may hand us a session built with Spark 4 defaults (ANSI on
-#: -> division by zero errors; host TZ -> hour() drift; TIMESTAMP(NANOS)
+#: Runtime-settable SQL confs every engine query depends on.
+#: ``get_session`` builds with them, and ``ensure_compat`` pins them
+#: once on any session the engine reads through, because the *caller*
+#: may hand us a session built with Spark 4 defaults (ANSI on ->
+#: division by zero errors; host TZ -> hour() drift; TIMESTAMP(NANOS)
 #: parquet rejected).
 RUNTIME_COMPAT_CONF = {
     "spark.sql.ansi.enabled": "false",
     "spark.sql.session.timeZone": "UTC",
+    # Spark 4 rejects TIMESTAMP(NANOS) parquet unless nanos surface as
+    # epoch-nano longs (normalize_event_ts converts them); the
+    # fixtures' events.ts is TIMESTAMP(MICROS) and unaffected
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.parquet.compression.codec": "zstd",
     # UDTFs evaluate Arrow-batched (ArrowEvalPythonUDTF), keeping the
@@ -80,21 +84,15 @@ RUNTIME_COMPAT_CONF = {
     "spark.sql.execution.arrow.maxRecordsPerBatch": "2500",
 }
 
-# A/B arms override confs via SPARK_GRAFT_EXTRA_CONF ("k=v;k2=v2").
-# get_session applies them at build time; mirroring them here keeps
-# the per-query compat pinning (ensure_compat) from silently undoing
-# an experiment arm mid-run.
-for _pair in os.environ.get("SPARK_GRAFT_EXTRA_CONF", "").split(";"):
-    if "=" in _pair:
-        _k, _v = _pair.split("=", 1)
-        RUNTIME_COMPAT_CONF[_k.strip()] = _v.strip()
-del _pair
-
-
 def ensure_compat(spark: SparkSession) -> SparkSession:
-    """Pin the runtime confs the engine's semantics rely on.
+    """Pin the runtime confs the engine's semantics rely on, once per
+    session object: the first call sets and reads back every
+    ``RUNTIME_COMPAT_CONF`` entry and flags the session, later calls
+    return at once. A session from ``spark.newSession()`` is a new
+    object and gets pinned on its own first read. A conf the caller
+    changes after the pin stays changed.
 
-    Failures are LOUD (warning log, once per session): a silently
+    Failures are LOUD (one warning log, at the pin): a silently
     dropped conf is how round 1 shipped the events.ts NTZ bug. The
     confs do not fix a column's surface — ``events.ts`` reads as
     TIMESTAMP_NTZ with or without ``nanosAsLong``, which only affects
@@ -102,6 +100,8 @@ def ensure_compat(spark: SparkSession) -> SparkSession:
     observed dtype (``sources.io.normalize_event_ts``) instead of
     trusting confs.
     """
+    if getattr(spark, "_graft_compat_pinned", False):
+        return spark
     failed: dict[str, str] = {}
     for k, v in RUNTIME_COMPAT_CONF.items():
         try:
@@ -111,15 +111,12 @@ def ensure_compat(spark: SparkSession) -> SparkSession:
                 failed[k] = f"set ok but reads back {got!r}"
         except Exception as e:  # static conf on some build
             failed[k] = repr(e)
-    if failed and not getattr(spark, "_graft_compat_warned", False):
+    if failed:
         _LOG.warning(
             "compat confs not applied (dtype normalizers still cover "
             "the schema surface, but semantics may drift): %s", failed,
         )
-        try:
-            spark._graft_compat_warned = True
-        except Exception:
-            pass
+    spark._graft_compat_pinned = True
     return spark
 
 
@@ -134,25 +131,20 @@ def get_session(
     Local default is ``local[$SPARK_GRAFT_CPUS]``; on a cluster pass
     ``master=None`` with a spark-submit-provided master. All knobs are
     plain Spark confs so the same code runs unmodified at 1000
-    executors.
+    executors. The builder carries ``RUNTIME_COMPAT_CONF`` (so sessions
+    from ``newSession()`` start from it too) plus the confs only a
+    build sets; the returned session is already pinned
+    (``ensure_compat``), so its reads set no conf.
     """
     cpus = _cpus()
     builder = (
         SparkSession.builder.appName(app_name)
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.parquet.compression.codec", "zstd")
+        .config(map=RUNTIME_COMPAT_CONF)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
-        # Spark 4 rejects TIMESTAMP(NANOS) parquet unless nanos are
-        # surfaced as epoch-nano longs (the reader converts them to
-        # microsecond timestamps, matching DuckDB's read); the
-        # fixtures' events.ts is TIMESTAMP(MICROS) and unaffected
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         # local-mode heap: 32 task threads + accumulated caches (the
         # dedup family's shared stages, layout warm-ups, streaming
@@ -170,13 +162,6 @@ def get_session(
         builder = builder.master(master)
     elif not os.environ.get("SPARK_GRAFT_NO_MASTER"):
         builder = builder.master(f"local[{cpus}]")
-    # SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2": arbitrary conf overrides for
-    # A/B arms (e.g. Arrow batch sizing) without code edits — the
-    # bench/verify drivers inherit them through the environment
-    for pair in os.environ.get("SPARK_GRAFT_EXTRA_CONF", "").split(";"):
-        if "=" in pair:
-            k, v = pair.split("=", 1)
-            builder = builder.config(k.strip(), v.strip())
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    return ensure_compat(builder.getOrCreate())

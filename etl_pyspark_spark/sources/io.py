@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import os
 from functools import reduce
+from stat import S_ISDIR
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -64,23 +65,34 @@ _SCHEMA_CONFS = (
 _SCHEMA_MEMO: dict[str, tuple] = {}
 
 
-def _parquet_identity(path: str) -> tuple:
-    """``(mtime_ns, size)`` of a file (the ``fixture_fingerprint``
-    rule), or the sorted ``(relpath, mtime_ns, size)`` of a
-    directory-shaped table's parquet files, so a part file rewritten in
-    place changes it too. Raises ``OSError`` if ``path`` is gone."""
+def _parquet_files(path: str) -> list[tuple[str, os.stat_result]]:
+    """``(path, stat)`` of each parquet file a table consists of: the
+    file itself, or a directory-shaped table's ``.parquet`` files in
+    sorted order. The one walk every identity, size and row-count
+    measurement of a table goes through. Raises ``OSError`` if
+    ``path`` is gone."""
     st = os.stat(path)
-    if not os.path.isdir(path):
-        return (st.st_mtime_ns, st.st_size)
-    files = []
-    for root, _, names in os.walk(path):
-        for f in names:
-            if f.endswith(".parquet"):
-                fp = os.path.join(root, f)
-                fst = os.stat(fp)
-                rel = os.path.relpath(fp, path)
-                files.append((rel, fst.st_mtime_ns, fst.st_size))
-    return tuple(sorted(files))
+    if not S_ISDIR(st.st_mode):
+        return [(path, st)]
+    found = [
+        os.path.join(root, f)
+        for root, _, names in os.walk(path)
+        for f in names
+        if f.endswith(".parquet")
+    ]
+    return [(fp, os.stat(fp)) for fp in sorted(found)]
+
+
+def _parquet_identity(path: str) -> tuple:
+    """The one file-identity rule: ``(relpath, mtime_ns, size)`` of each
+    parquet file of ``path`` (relpath ``"."`` for a file-shaped table),
+    so a part file rewritten in place changes it. Keys the schema memo
+    and, through ``fixture_fingerprint``, every layout marker and
+    fixture memo. Raises ``OSError`` if ``path`` is gone."""
+    return tuple(
+        (os.path.relpath(fp, path), st.st_mtime_ns, st.st_size)
+        for fp, st in _parquet_files(path)
+    )
 
 
 def parquet_schema(spark: SparkSession, path: str) -> StructType:
@@ -159,7 +171,8 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
 # 256. The rule "size shuffle.partitions to the job's data volume" is
 # the one knob that is ALWAYS set per job on a real cluster — so the
 # engine derives it from the fixture itself: the largest table's row
-# count (read from parquet FOOTERS only, memoized per fixture dir),
+# count (read from parquet FOOTERS only, memoized per fixture
+# identity, ``fixture_fingerprint``),
 # one partition per ~200k input rows, floored at the session's own
 # configured value and capped at 4096. At bench scale (600k rows) the
 # floor wins and the sf0.1 plan is byte-identical; at 30x/100x the
@@ -167,11 +180,8 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
 # aggregation's ~700M rows) out of spill with NO manual knob. Rows,
 # not bytes, because the pathological shuffles are intermediate
 # EXPLOSIONS (quadratic-in-degree wedges) — compressed input bytes
-# under-estimate them by 30x+.
-#
-# Opt out with SPARK_GRAFT_SHUFFLE_AUTOSIZE=0 (e.g. an A/B that wants
-# a hand-pinned value to stick across read_table calls); session-
-# builder `shuffle_partitions=` overrides act as the floor instead.
+# under-estimate them by 30x+. A session-builder `shuffle_partitions=`
+# override acts as the floor.
 
 _AUTOSIZE_ROWS_PER_PARTITION = 200_000
 _AUTOSIZE_MAX_PARTITIONS = 4096
@@ -210,19 +220,12 @@ def _fixture_max_rows(sf_dir: str) -> int:
 
     mx = 0
     for t in FIXTURE_TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        n = 0
         try:
-            if os.path.isdir(p):
-                # directory-shaped table (grow fixtures, real lakes)
-                for root, _, files in os.walk(p):
-                    for f in files:
-                        if f.endswith(".parquet"):
-                            n += pq.ParquetFile(
-                                os.path.join(root, f)
-                            ).metadata.num_rows
-            elif os.path.isfile(p):
-                n = pq.ParquetFile(p).metadata.num_rows
+            files = _parquet_files(os.path.join(sf_dir, f"{t}.parquet"))
+        except OSError:
+            continue
+        try:
+            n = sum(pq.ParquetFile(fp).metadata.num_rows for fp, _ in files)
         except Exception:
             failed.append(t)
             # NON-ZERO fallback (r08 verdict #5): estimate rows from
@@ -232,7 +235,7 @@ def _fixture_max_rows(sf_dir: str) -> int:
             # coalesced back by AQE for free, while recording 0 rows
             # made autosize silently inert on exactly the fixture it
             # could no longer read.
-            n = _table_bytes(p) // 50
+            n = sum(st.st_size for _, st in files) // 50
         mx = max(mx, n)
     if failed:
         print(
@@ -248,18 +251,10 @@ def _fixture_max_rows(sf_dir: str) -> int:
 def _table_bytes(p: str) -> int:
     """Total on-disk bytes of a file- or directory-shaped table; 0 if
     unreadable (the caller then degrades to an unsized table)."""
-    total = 0
     try:
-        if os.path.isdir(p):
-            for root, _, files in os.walk(p):
-                for f in files:
-                    if f.endswith(".parquet"):
-                        total += os.path.getsize(os.path.join(root, f))
-        elif os.path.isfile(p):
-            total = os.path.getsize(p)
+        return sum(st.st_size for _, st in _parquet_files(p))
     except OSError:
         return 0
-    return total
 
 
 def autosize_shuffle_partitions(spark: SparkSession, sf_dir: str) -> int:
@@ -269,7 +264,7 @@ def autosize_shuffle_partitions(spark: SparkSession, sf_dir: str) -> int:
     alternating fixtures in one session re-derive per query — a 100x
     query raises it, the next sf0.1 query drops it back, and AQE
     coalesces any small case down for free. Returns the applied value
-    (0 = autosize disabled/unavailable).
+    (0 when the session's conf cannot be read).
 
     Construct-then-execute-immediately assumption (r07 advice #4):
     the conf is set when ``read_table`` CONSTRUCTS the DataFrame, but
@@ -280,8 +275,6 @@ def autosize_shuffle_partitions(spark: SparkSession, sf_dir: str) -> int:
     tests, the external harness) all force each query before building
     the next, so the assumption holds there; an interleaving caller
     should re-call this right before each action."""
-    if os.environ.get("SPARK_GRAFT_SHUFFLE_AUTOSIZE", "1") == "0":
-        return 0
     try:
         app = spark.sparkContext.applicationId
         cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -302,9 +295,11 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (nano-long, TIMESTAMP_NTZ, TIMESTAMP) to one microsecond TIMESTAMP,
     the value DuckDB reads, so oracles agree.
 
-    ``ensure_compat`` pins ANSI-off/UTC confs because the caller
-    (e.g. the verify driver) may pass a session built with Spark 4
-    defaults.
+    ``ensure_compat`` pins ANSI-off/UTC confs on the first read of a
+    session, because the caller (e.g. the verify driver) may pass a
+    session built with Spark 4 defaults; later reads set no compat
+    conf, so a conf the caller sets afterwards (a smaller Arrow batch,
+    say) holds for the queries it builds.
 
     Also auto-sizes ``spark.sql.shuffle.partitions`` to the fixture's
     volume (see ``autosize_shuffle_partitions``) — every engine query
@@ -411,19 +406,24 @@ def compact_small_files(
 
 
 def fixture_fingerprint(sf_dir: str, *tables: str) -> str:
-    """Identity string for a pay-once layout marker: abspath of the
-    fixture dir plus mtime_ns/size of each source parquet. Keying the
-    marker on this (not the path alone) means regenerated fixture data
-    at the same path triggers a rebuild instead of silently serving a
-    stale layout."""
+    """Identity string for a pay-once layout marker or a fixture memo:
+    abspath of the fixture dir plus ``_parquet_identity`` of each
+    source table — ``t:mtime_ns:size`` for a file-shaped table,
+    ``t/relpath:mtime_ns:size`` per part file of a directory-shaped
+    one, ``t:missing`` when absent. Keying on this (not the path
+    alone) means regenerated fixture data at the same path, a part
+    file rewritten in place included, triggers a rebuild instead of
+    silently serving a stale layout."""
     parts = [os.path.abspath(sf_dir)]
     for t in tables:
-        p = os.path.join(sf_dir, f"{t}.parquet")
         try:
-            st = os.stat(p)
-            parts.append(f"{t}:{st.st_mtime_ns}:{st.st_size}")
+            ident = _parquet_identity(os.path.join(sf_dir, f"{t}.parquet"))
         except OSError:
             parts.append(f"{t}:missing")
+            continue
+        for rel, mtime, size in ident:
+            name = t if rel == "." else f"{t}/{rel}"
+            parts.append(f"{name}:{mtime}:{size}")
     return "|".join(parts)
 
 

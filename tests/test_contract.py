@@ -121,6 +121,38 @@ def test_observe_metrics_without_extra_pass(spark, oracle_sf_dir):
     assert m["rows"] >= n and m["null_qty"] == 0
 
 
+def test_compat_pinned_once_per_session(spark, oracle_sf_dir, monkeypatch):
+    """A caller's session built with Spark 4 defaults gets the compat
+    confs on its first engine read and no conf set on later reads; a
+    sibling session's confs are its own."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from etl_pyspark_spark.sources.io import read_table
+
+    keys = ("spark.sql.ansi.enabled", "spark.sql.session.timeZone")
+    fixture = {k: spark.conf.get(k) for k in keys}
+    s2 = spark.newSession()
+    s2.conf.set("spark.sql.ansi.enabled", "true")
+    s2.conf.set("spark.sql.session.timeZone", "America/New_York")
+    read_table(s2, oracle_sf_dir, "orders")
+    assert {k: s2.conf.get(k) for k in keys} == {
+        "spark.sql.ansi.enabled": "false",
+        "spark.sql.session.timeZone": "UTC",
+    }
+    assert {k: spark.conf.get(k) for k in keys} == fixture
+
+    sets = []
+    real_set = RuntimeConfig.set
+
+    def spy(self, key, value):
+        sets.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
+    read_table(s2, oracle_sf_dir, "orders")
+    assert sets == []
+
+
 def test_driver_memory_default_covers_long_sessions(spark):
     """The 200-query bench session thrashes an 8g heap (measured 2-3x
     session-wide GC slowdown, round 3); the 20g default is

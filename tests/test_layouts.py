@@ -2,6 +2,8 @@
 
 - ``pay_once`` rebuilds a layout unless every output's marker names
   the wanted fixture, and marks outputs only after a build succeeds.
+- ``fixture_fingerprint``, which the markers name, changes when a part
+  file of a directory-shaped table is rewritten in place.
 - The engine writes under the checkout it is imported from: a copy of
   the package builds its layouts under the copy, not under this
   checkout.
@@ -87,6 +89,33 @@ def test_pay_once_marks_nothing_when_build_fails(tmp_path):
     build = _Build(outs)
     pay_once([str(o) for o in outs], "fixture-a", build)
     assert build.calls == 1
+
+
+def test_fingerprint_covers_part_files_rewritten_in_place(tmp_path):
+    """A directory-shaped table whose part file is rewritten in place
+    (same name, more rows) gets a new fingerprint, so its pay-once
+    layouts rebuild and the autosize row memo re-measures."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etl_pyspark_spark.sources import io
+
+    part = tmp_path / "orders.parquet" / "part-0.parquet"
+    part.parent.mkdir()
+    pq.write_table(pa.table({"o_orderkey": list(range(10))}), part)
+    sf = str(tmp_path)
+    before = io.fixture_fingerprint(sf, "orders")
+    assert io._fixture_max_rows(sf) == 10
+    outs = [tmp_path / "layout"]
+    build = _Build(outs)
+    pay_once([str(o) for o in outs], before, build)
+
+    pq.write_table(pa.table({"o_orderkey": list(range(25))}), part)
+    after = io.fixture_fingerprint(sf, "orders")
+    assert after != before
+    pay_once([str(o) for o in outs], after, build)
+    assert build.calls == 2
+    assert io._fixture_max_rows(sf) == 25
 
 
 def test_engine_builds_layouts_under_the_checkout_it_runs_from(tmp_path, sf_dir):

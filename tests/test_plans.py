@@ -998,15 +998,6 @@ def test_autosize_shuffle_partitions_floor_and_raise(spark, oracle_sf_dir):
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
-def test_autosize_disabled_by_env(spark, oracle_sf_dir, monkeypatch):
-    import etl_pyspark_spark.sources.io as io
-
-    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_AUTOSIZE", "0")
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    assert io.autosize_shuffle_partitions(spark, oracle_sf_dir) == 0
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
-
-
 def test_autosize_corrupt_footer_warns_and_falls_back(tmp_path, capfd):
     """r08 verdict #5: a corrupt parquet footer must produce a VISIBLE
     warning and a NON-ZERO bytes-derived row estimate — recording 0
