@@ -66,19 +66,12 @@ def _scan_size_bytes(df: DataFrame) -> int | None:
 def dict_hint(dict_df: DataFrame, corpus_bytes: int | None) -> DataFrame:
     """Broadcast hint for a set-dictionary join side, gated on size.
 
-    ``SPARK_GRAFT_SET_DICT_BROADCAST`` = ``always`` | ``never`` |
-    ``auto`` (default): auto broadcasts while the source corpus is
-    under ``_DICT_BCAST_MAX_CORPUS_BYTES`` on disk and falls back to a
-    plain (shuffled hash) join above it. ``corpus_bytes`` None means
-    no reliable source measurement exists (callers pass parquet footer
-    bytes or a scan-relation estimate); auto then keeps the broadcast —
-    the bench/test surfaces always measure, and the ``never`` switch
-    is the manual escape for unmeasurable lake inputs."""
-    mode = os.environ.get("SPARK_GRAFT_SET_DICT_BROADCAST", "auto")
-    if mode == "never":
-        return dict_df
-    if mode == "always":
-        return F.broadcast(dict_df)
+    Broadcasts while the source corpus is under
+    ``_DICT_BCAST_MAX_CORPUS_BYTES`` on disk and falls back to a plain
+    (shuffled hash) join above it. ``corpus_bytes`` None means no
+    reliable source measurement exists (callers pass on-disk parquet
+    bytes or a scan-relation estimate); the hint is then kept — the
+    bench/test surfaces always measure."""
     if corpus_bytes is not None and corpus_bytes > _DICT_BCAST_MAX_CORPUS_BYTES:
         return dict_df
     return F.broadcast(dict_df)

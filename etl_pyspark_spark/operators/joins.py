@@ -8,9 +8,9 @@ right physical strategy at any scale:
   shuffled-hash vs sort-merge from statistics + AQE; small dimension
   tables get an explicit ``F.broadcast`` hint so a 100 TB fact scan
   never shuffles for a kilobyte dimension.
-- non-equi range joins: expressed as a join condition (not a cross
-  join + filter) so Spark can use broadcast-nested-loop only when one
-  side is genuinely small.
+- point-in-interval range joins where both sides are large:
+  ``range_join_binned`` rewrites the range predicate as a bin
+  equi-join plus residual filter, never a nested loop.
 - as-of join (the time-series staple Spark lacks as a builtin):
   implemented with a union + window trick — O(n log n) with a single
   shuffle on (key, time), no per-row Python, no merge_asof on the
@@ -19,30 +19,9 @@ right physical strategy at any scale:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-
-def broadcast_join(
-    fact: DataFrame, dim: DataFrame, on, how: str = "inner"
-) -> DataFrame:
-    """Equi join with an explicit broadcast hint on the dimension side.
-
-    At 100 TB the win is that the fact table never shuffles: each task
-    hash-joins against an executor-local copy of the dimension.
-    """
-    return fact.join(F.broadcast(dim), on, how)
-
-
-def range_join(
-    left: DataFrame, right: DataFrame, condition: Column, how: str = "inner"
-) -> DataFrame:
-    """Non-equi (theta/band) join. Keep one equi conjunct in
-    ``condition`` whenever the data allows — Catalyst then uses it as
-    the hash key and evaluates the range residually, avoiding a
-    nested-loop plan."""
-    return left.join(right, condition, how)
 
 
 def range_join_binned(

@@ -14,7 +14,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window, WindowSpec
+from pyspark.sql.window import Window
 
 
 def ranked(
@@ -44,36 +44,6 @@ def top_k_per_group(
     """Deterministic top-k rows per group (order_by must be a total
     order — include a unique tiebreaker)."""
     return ranked(df, partition_by, order_by).where(F.col("rk") <= k)
-
-
-def with_lag_lead(
-    df: DataFrame,
-    partition_by: Sequence[str],
-    order_by: Sequence[Column],
-    col: str,
-    offsets: Sequence[int] = (1,),
-) -> DataFrame:
-    """Previous/next values of ``col`` along each partition's order."""
-    w = Window.partitionBy(*partition_by).orderBy(*order_by)
-    out = df
-    for off in offsets:
-        out = out.withColumn(f"{col}_lag{off}", F.lag(col, off).over(w))
-        out = out.withColumn(f"{col}_lead{off}", F.lead(col, off).over(w))
-    return out
-
-
-def rows_window(
-    partition_by: Sequence[str],
-    order_by: Sequence[Column],
-    preceding: int,
-    following: int = 0,
-) -> WindowSpec:
-    """ROWS BETWEEN frame spec."""
-    return (
-        Window.partitionBy(*partition_by)
-        .orderBy(*order_by)
-        .rowsBetween(-preceding, following)
-    )
 
 
 def dedup_latest(

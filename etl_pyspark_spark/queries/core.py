@@ -37,7 +37,8 @@ from etl_pyspark_spark.functions.compat import pround, sql_pround
 from etl_pyspark_spark.operators.baskets import MAX_BASKET
 from etl_pyspark_spark.operators.blocking import MAX_BLOCK
 from etl_pyspark_spark.operators.pipeline import events_pipeline
-from etl_pyspark_spark.sources.io import read_table
+from etl_pyspark_spark.session import ensure_compat
+from etl_pyspark_spark.sources.io import autosize_shuffle_partitions, read_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -49,6 +50,10 @@ _DEPTH = [0]
 def query(name: str, oracle: str | None = None):
     """Register a (spark, sf_dir) -> DataFrame callable plus oracle SQL.
 
+    The registered wrapper is the one per-query boundary: its
+    prologue (below) makes every per-query decision, so ``read_table``
+    and the stream sources only read.
+
     Duplicate registration fails LOUDLY: a second ``@query("x")`` used
     to overwrite the first silently (the only symptom was the registry
     count dropping — caught twice by hand-grepping in rounds 4/7)."""
@@ -56,23 +61,31 @@ def query(name: str, oracle: str | None = None):
     def deco(fn):
         assert name not in QUERIES, f"duplicate query registration: {name}"
 
-        # Query-boundary cache hygiene: the PREVIOUS query's scoped
-        # within-query persists (checkpoint.scoped_persist) are dead by
-        # the time the next query builds, but used to stay registered
-        # in the CacheManager for the whole session — by query ~300 of
-        # a full run every compilation walked 60+ stale cached plans
-        # and late-session queries measured 1.5-5x their solo times
-        # (guide §5: "unpersist when done"). Draining at entry keeps
-        # the harness contract unchanged (any driver that calls
-        # queries()[name] gets the hygiene for free).
+        # The one per-query prologue, so any driver that calls
+        # queries()[name] gets it for free:
+        # 1. drain: the PREVIOUS query's scoped within-query persists
+        #    (checkpoint.scoped_persist) are dead by the time the next
+        #    query builds, but used to stay registered in the
+        #    CacheManager for the whole session — by query ~300 of a
+        #    full run every compilation walked 60+ stale cached plans
+        #    and late-session queries measured 1.5-5x their solo times
+        #    (guide §5: "unpersist when done");
+        # 2. pin the compat confs (session.ensure_compat; a no-op
+        #    after a session's first query), because the caller's
+        #    session may carry Spark 4 defaults;
+        # 3. size spark.sql.shuffle.partitions to the fixture once
+        #    (sources.io.autosize_shuffle_partitions), however many
+        #    tables the query reads.
         @functools.wraps(fn)
         def wrapped(spark, sf_dir):
             # depth guard: a few queries build on ANOTHER registered
             # query (unpivot on pivot, snapshot on reference_pipeline);
             # the nested call must not drain the outer query's own
-            # scoped caches mid-build.
+            # scoped caches mid-build, nor repeat the prologue.
             if _DEPTH[0] == 0:
                 drain_scoped_caches()
+                ensure_compat(spark)
+                autosize_shuffle_partitions(spark, sf_dir)
             _DEPTH[0] += 1
             try:
                 return fn(spark, sf_dir)

@@ -24,10 +24,11 @@ Config choices (and why):
   re-plans from runtime stats.
 - ``shuffle.partitions`` defaults to cores locally, but that is only
   the FLOOR: AQE coalesces down, never up, so
-  ``sources.io.autosize_shuffle_partitions`` (called by every
-  ``read_table``) raises it to the fixture's input volume — the 100x
-  grow smoke spilled at the static 32 until the volume-derived value
-  (one partition per ~200k input rows of the largest table) applied.
+  ``sources.io.autosize_shuffle_partitions`` (called once at the
+  start of every registered query) raises it to the fixture's input
+  volume — the 100x grow smoke spilled at the static 32 until the
+  volume-derived value (one partition per ~200k input rows of the
+  largest table) applied.
 """
 
 from __future__ import annotations
@@ -46,8 +47,8 @@ def _cpus() -> int:
 
 #: Runtime-settable SQL confs every engine query depends on.
 #: ``get_session`` builds with them, and ``ensure_compat`` pins them
-#: once on any session the engine reads through, because the *caller*
-#: may hand us a session built with Spark 4 defaults (ANSI on ->
+#: once on any session a registered query runs on, because the
+#: *caller* may hand us a session built with Spark 4 defaults (ANSI on ->
 #: division by zero errors; host TZ -> hour() drift; TIMESTAMP(NANOS)
 #: parquet rejected).
 RUNTIME_COMPAT_CONF = {
@@ -88,8 +89,10 @@ def ensure_compat(spark: SparkSession) -> SparkSession:
     """Pin the runtime confs the engine's semantics rely on, once per
     session object: the first call sets and reads back every
     ``RUNTIME_COMPAT_CONF`` entry and flags the session, later calls
-    return at once. A session from ``spark.newSession()`` is a new
-    object and gets pinned on its own first read. A conf the caller
+    return at once. The engine calls it in two places: ``get_session``
+    and the prologue of every registered query (``queries.core.query``);
+    a read never does. A session from ``spark.newSession()`` is a new
+    object and gets pinned by its own first query. A conf the caller
     changes after the pin stays changed.
 
     Failures are LOUD (one warning log, at the pin): a silently
@@ -134,7 +137,7 @@ def get_session(
     executors. The builder carries ``RUNTIME_COMPAT_CONF`` (so sessions
     from ``newSession()`` start from it too) plus the confs only a
     build sets; the returned session is already pinned
-    (``ensure_compat``), so its reads set no conf.
+    (``ensure_compat``), so its queries set no compat conf.
     """
     cpus = _cpus()
     builder = (

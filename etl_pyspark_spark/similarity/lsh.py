@@ -104,31 +104,6 @@ def planes_per_band_for(n: int, target_bucket: int = 4096) -> int:
     return max(4, min(16, math.ceil(math.log2(n / target_bucket))))
 
 
-def candidate_pairs(
-    df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
-    """Distinct (id_a < id_b) pairs sharing at least one LSH band."""
-    vec = as_double(F.col(vec_col))
-    keys = band_keys(vec)
-    banded = [
-        df.select(
-            F.col(id_col).alias("vid"),
-            F.lit(band).alias("band"),
-            keys[band].alias("bucket"),
-        )
-        for band in range(BANDS)
-    ]
-    exploded = reduce(lambda a, b: a.unionByName(b), banded)
-    left = exploded.select(F.col("vid").alias("id_a"), "band", "bucket")
-    right = exploded.select(F.col("vid").alias("id_b"), "band", "bucket")
-    return (
-        left.join(right, ["band", "bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-
 def bucket_cosine_pairs(
     df: DataFrame,
     threshold: float,

@@ -33,8 +33,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from etl_pyspark_spark.session import ensure_compat
-
 #: Tables the driver generates under /root/testdata/sf*/ (TESTDATA.md)
 FIXTURE_TABLES = (
     "region",
@@ -146,7 +144,7 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
       div 1000)``. Integer ``div``: a double ``/ 1000`` would round epoch
       nanos (> 2^53) and shift some timestamps by 1 us.
     - ``timestamp_ntz`` (Spark 4 default)   -> cast to TIMESTAMP. With
-      the session TZ pinned UTC (ensure_compat) the cast is
+      the session TZ pinned UTC (``session.ensure_compat``) the cast is
       value-identical — verified bit-exact against DuckDB's
       ``epoch_us`` read.
     - ``timestamp``     -> already the target surface; no-op.
@@ -267,11 +265,12 @@ def autosize_shuffle_partitions(spark: SparkSession, sf_dir: str) -> int:
     (0 when the session's conf cannot be read).
 
     Construct-then-execute-immediately assumption (r07 advice #4):
-    the conf is set when ``read_table`` CONSTRUCTS the DataFrame, but
-    Spark reads ``shuffle.partitions`` at EXECUTION — a plan built
-    against a large fixture but executed only after a later
-    ``read_table`` against a small one runs under the small value
-    (perf only, never correctness). The engine's drivers (bench,
+    the conf is set once at the query's start (the
+    ``queries.core.query`` prologue, never per read), while the
+    DataFrame is BUILT, but Spark reads ``shuffle.partitions`` at
+    EXECUTION — a plan built against a large fixture but executed
+    only after a later query against a small one has started runs
+    under the small value (perf only, never correctness). The engine's drivers (bench,
     tests, the external harness) all force each query before building
     the next, so the assumption holds there; an interleaving caller
     should re-call this right before each action."""
@@ -295,19 +294,11 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (nano-long, TIMESTAMP_NTZ, TIMESTAMP) to one microsecond TIMESTAMP,
     the value DuckDB reads, so oracles agree.
 
-    ``ensure_compat`` pins ANSI-off/UTC confs on the first read of a
-    session, because the caller (e.g. the verify driver) may pass a
-    session built with Spark 4 defaults; later reads set no compat
-    conf, so a conf the caller sets afterwards (a smaller Arrow batch,
-    say) holds for the queries it builds.
-
-    Also auto-sizes ``spark.sql.shuffle.partitions`` to the fixture's
-    volume (see ``autosize_shuffle_partitions``) — every engine query
-    enters through here, so the knob tracks the data the query is
-    about to shuffle.
+    A read sets no conf and walks no other table: the compat pin and
+    the shuffle sizing run once per query, in the ``queries.core.query``
+    prologue. The only confs read are ``parquet_schema``'s
+    ``_SCHEMA_CONFS``.
     """
-    ensure_compat(spark)
-    autosize_shuffle_partitions(spark, sf_dir)
     df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if "ts" in df.columns:
         df = normalize_event_ts(df, "ts")

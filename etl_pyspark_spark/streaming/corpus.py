@@ -36,7 +36,6 @@ from pyspark.sql import functions as F
 
 from etl_pyspark_spark.functions import text as T
 from etl_pyspark_spark.functions.compat import pround
-from etl_pyspark_spark.session import ensure_compat
 from etl_pyspark_spark.sources.io import parquet_schema
 from etl_pyspark_spark.streaming.windows import run_to_memory_table
 
@@ -45,7 +44,6 @@ def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming scan of the documents fixture. The schema is the batch
     reader's (``sources.io.parquet_schema``): inferring it runs one
     Spark job, which the memo pays once per file and conf set."""
-    ensure_compat(spark)
     import os
 
     path = f"{sf_dir}/documents.parquet"

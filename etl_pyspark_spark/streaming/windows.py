@@ -39,7 +39,6 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pyspark_spark.session import ensure_compat
 from etl_pyspark_spark.sources.io import normalize_event_ts, parquet_schema
 
 _MEM_IDS = itertools.count()
@@ -81,7 +80,6 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from a nano file under nanosAsLong, TIMESTAMP_NTZ by Spark 4
     default, TIMESTAMP) to a microsecond TIMESTAMP — ``withWatermark``
     requires TIMESTAMP and rejects NTZ."""
-    ensure_compat(spark)
     path = f"{sf_dir}/events.parquet"
     schema = parquet_schema(spark, path)
     if os.path.isdir(path):

@@ -123,18 +123,18 @@ def test_observe_metrics_without_extra_pass(spark, oracle_sf_dir):
 
 def test_compat_pinned_once_per_session(spark, oracle_sf_dir, monkeypatch):
     """A caller's session built with Spark 4 defaults gets the compat
-    confs on its first engine read and no conf set on later reads; a
-    sibling session's confs are its own."""
+    confs on its first registered query and no conf set on later
+    queries; a sibling session's confs are its own."""
     from pyspark.sql.conf import RuntimeConfig
 
-    from etl_pyspark_spark.sources.io import read_table
+    from etl_pyspark_spark.registry import QUERIES
 
     keys = ("spark.sql.ansi.enabled", "spark.sql.session.timeZone")
     fixture = {k: spark.conf.get(k) for k in keys}
     s2 = spark.newSession()
     s2.conf.set("spark.sql.ansi.enabled", "true")
     s2.conf.set("spark.sql.session.timeZone", "America/New_York")
-    read_table(s2, oracle_sf_dir, "orders")
+    QUERIES["filter_project"](s2, oracle_sf_dir)
     assert {k: s2.conf.get(k) for k in keys} == {
         "spark.sql.ansi.enabled": "false",
         "spark.sql.session.timeZone": "UTC",
@@ -149,7 +149,7 @@ def test_compat_pinned_once_per_session(spark, oracle_sf_dir, monkeypatch):
         return real_set(self, key, value)
 
     monkeypatch.setattr(RuntimeConfig, "set", spy)
-    read_table(s2, oracle_sf_dir, "orders")
+    QUERIES["filter_project"](s2, oracle_sf_dir)
     assert sets == []
 
 

@@ -32,7 +32,6 @@ KNOBS = frozenset(
         "SPARK_GRAFT_NO_MASTER",
         "SPARK_GRAFT_ORACLE_SF",
         "SPARK_GRAFT_ORACLE_SF_DIR",
-        "SPARK_GRAFT_SET_DICT_BROADCAST",
         "SPARK_GRAFT_SF_DIR",
         "SPARK_GRAFT_SMOKE_DST",
         "SPARK_GRAFT_SMOKE_MODE",
@@ -54,7 +53,7 @@ def _sources():
 def test_knobs_match_frozen_list():
     pattern = re.compile(r"SPARK_GRAFT_[A-Z0-9_]+")
     found = {m for p in _sources() for m in pattern.findall(p.read_text())}
-    assert len(KNOBS) == 21
+    assert len(KNOBS) == 20
     assert found == KNOBS, {
         "new": sorted(found - KNOBS),
         "gone": sorted(KNOBS - found),
