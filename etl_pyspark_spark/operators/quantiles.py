@@ -36,7 +36,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from etl_pyspark_spark.operators.ranks import with_global_cumsum
+from etl_pyspark_spark.operators.ranks import literal_at, with_global_cumsum
 
 DEFAULT_ACCURACY = 10_000
 
@@ -70,113 +70,86 @@ def exact_discrete_quantiles(
     # cumsum's range exchange to that, not the global shuffle conf
     # (a 50-row sliver at sf0.1 doesn't need 32 tasks × 3 stages)
     est_rows = max(1, (6 * len(probs) * n) // accuracy)
-    spark = vals.sparkSession
-    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    cap = int(vals.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     n_part = max(1, min(cap, -(-est_rows // 65536)))
-    cuts = _rank_search_all(spark, vals, brackets, ranks, n_part)
+    cuts = _rank_search_all(vals, brackets, ranks, n_part)
     out = []
     for i, cut in enumerate(cuts):
         if cut is None:  # pragma: no cover - outside sketch guarantee
-            cut = _rank_search_all(
-                vals.sparkSession,
-                vals,
-                [(None, None)],
-                [ranks[i]],
-                None,
-            )[0]
+            cut = _rank_search_all(vals, [(None, None)], [ranks[i]])[0]
         out.append(cut)
     return out
 
 
-def _rank_search_all(spark, vals: DataFrame, brackets, ranks, n_part=None):
+def _rank_search_all(vals: DataFrame, brackets, ranks, n_part=None):
     """For each probe i: smallest value v in brackets[i] with
     below_count(< a_i) + cum_count(≤ v within the bracket) ≥ ranks[i].
 
     ALL probes share ONE distributed pass over ``vals`` — the only
-    pass this function makes (r12: the separate below-count scan and
-    totals scan were folded in; the operator's per-call cost dropped
-    from 4 full passes to 2 including the sketch pass). The pass
-    aggregates the in-bracket sliver rows (per-probe, per-value counts
-    — sketch-bounded mass) and collects the exact below-bracket counts
-    as ``observe()`` metrics ON THE SAME SCAN (a per-probe tag row for
-    belows would multiply the aggregate's input k-fold — measured
-    slower for 5-probe calls; the observation is free). The aggregate
-    is localCheckpointed — sliver-sized — so the totals collect, the
-    range-partitioned cumsum and the final hit collect all read the
-    tiny materialization instead of re-scanning ``vals``. Jobs stay
-    constant in len(probs)."""
-    from pyspark.sql import Observation
-
+    pass this function makes (with the sketch pass, 2 per call). The
+    pass aggregates, in one shuffle aggregate, the in-bracket sliver
+    rows (key = probe id, per-value counts — sketch-bounded mass) and
+    the below-bracket counts: with the lower ends sorted on the
+    driver, a row carries c(v) = the number of lower ends above v as
+    the key ``-c(v)`` (NULL value, so k groups at most; rows with
+    c(v) = 0 emit nothing), and probe i's below count is the sum of
+    the keys with c ≥ #{lower ends ≥ a_i}. Being an ordinary
+    aggregate, a retried or speculative task cannot count a row twice
+    (an accumulator-backed ``observe()`` can). The aggregate is
+    localCheckpointed — sliver-sized — so the totals collect (belows
+    and per-probe totals in one), the range-partitioned cumsum over
+    the probe rows and the final hit collect all read the tiny
+    materialization instead of re-scanning ``vals``. Base, below
+    count and rank fold into one literal threshold per probe, so the
+    hit search joins nothing. Jobs stay constant in len(probs)."""
     from etl_pyspark_spark.checkpoint import DISK_CKPT
 
-    probe_filters = []
-    below_aggs = []
-    for i, (a, b) in enumerate(brackets):
-        cond = (
-            F.lit(True)
-            if a is None
-            else (F.col("_v") >= a) & (F.col("_v") <= b)
-        )
-        probe_filters.append(
-            F.when(cond, F.lit(i)).otherwise(F.lit(None))
-        )
-        below_aggs.append(
-            F.count(
-                F.when(
-                    F.lit(False)
-                    if a is None
-                    else F.col("_v") < F.lit(a),
-                    1,
-                )
-            ).alias(f"b{i}")
-        )
-    obs = Observation()
-    tagged_src = vals.observe(obs, *below_aggs)
+    v = F.col("_v")
+    lows = sorted(a for a, _ in brackets if a is not None)
+    # c(v): the number of lower ends strictly above v
+    n_above = sum(((v < a).cast("int") for a in lows), F.lit(0))
+    tags = [
+        F.when(F.lit(True) if a is None else (v >= a) & (v <= b), F.lit(i))
+        for i, (a, b) in enumerate(brackets)
+    ]
+    tags.append(F.when(n_above > 0, -n_above))
     grouped = (
-        tagged_src.select(
-            "_v",
-            F.explode(
-                F.array_compact(F.array(*probe_filters))
-            ).alias("_probe"),
+        vals.select(
+            "_v", F.explode(F.array_compact(F.array(*tags))).alias("_probe")
         )
+        .select("_probe", F.when(F.col("_probe") >= 0, v).alias("_v"))
         .groupBy("_probe", "_v")
         .agg(F.count(F.lit(1)).alias("_cnt"))
-        # eager checkpoint = the ONE job over vals; obs.get is
-        # complete the moment it returns
+        # eager checkpoint = the ONE job over vals
         .localCheckpoint(storageLevel=DISK_CKPT)
     )
-    below_row = obs.get
-    belows = [int(below_row[f"b{i}"]) for i in range(len(brackets))]
-    # ONE tiny job over the checkpointed sliver: per-probe totals
-    # (the cumsum's exclusive base)
+    # ONE tiny job over the checkpointed sliver: per-probe totals (the
+    # cumsum's exclusive base) and the below counts
     totals = {
         int(r["_probe"]): int(r["_t"])
         for r in grouped.groupBy("_probe")
         .agg(F.sum("_cnt").alias("_t"))
         .collect()
     }
-    bases, acc = {}, 0
-    for i in range(len(brackets)):
-        bases[i] = acc
-        acc += totals.get(i, 0)
-    tagged = grouped
+    need, base = [], 0
+    for i, (a, _) in enumerate(brackets):
+        below = 0
+        if a is not None:
+            at_least = sum(1 for x in lows if x >= a)
+            below = sum(t for key, t in totals.items() if -key >= at_least)
+        need.append(ranks[i] - below + base)
+        base += totals.get(i, 0)
     cum = with_global_cumsum(
-        tagged, ["_probe", "_v"], "_cnt", "_cum", num_partitions=n_part
+        grouped.where(F.col("_probe") >= 0),
+        ["_probe", "_v"],
+        "_cnt",
+        "_cum",
+        num_partitions=n_part,
     )
-    params = spark.createDataFrame(
-        [
-            (i, bases.get(i, 0), belows[i], ranks[i])
-            for i in range(len(brackets))
-        ],
-        "_probe int, _base bigint, _below bigint, _rank bigint",
-    )
+    need_of_probe = literal_at(dict(enumerate(need)), "_probe")
     hits = {
         int(r["_probe"]): r["v"]
-        for r in cum.join(F.broadcast(params), "_probe")
-        .where(
-            F.col("_cum") - F.col("_base") + F.col("_below")
-            >= F.col("_rank")
-        )
+        for r in cum.where(F.col("_cum") >= need_of_probe)
         .groupBy("_probe")
         .agg(F.min("_v").alias("v"))
         .collect()

@@ -17,10 +17,12 @@ per-row labeling never serializes:
 3. the in-partition position comes from ``monotonically_increasing_id``
    MINUS the partition's min id (consecutive within a partition by
    construction), so the global rank is ``offset + position + 1`` — a
-   broadcast-join + projection, no Window operator, no second
-   exchange. (``with_global_cumsum`` does need a per-partition running
-   sum, so it windows BY PARTITION ID — parallel across partitions,
-   never SinglePartition.)
+   projection that reads the partition's offset and min id from
+   literal arrays indexed by partition id (``literal_at``): no join, no
+   broadcast, no Window operator, no second exchange.
+   (``with_global_cumsum`` does need a per-partition running sum, so it
+   windows BY PARTITION ID — parallel across partitions, never
+   SinglePartition.)
 
 Callers must pass a TOTAL order (tie-break with a unique key, e.g.
 ``(n_chars, doc_id)``) — with ties left ambiguous, in-partition order
@@ -34,7 +36,7 @@ flagged by the round-3 review for ``length_bucket_batching``,
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 from etl_pyspark_spark.checkpoint import scoped_family_persist
@@ -59,46 +61,52 @@ def _range_partitioned(
     )
 
 
-def _partition_stats(part: DataFrame, weight) -> tuple[list, int]:
-    """One job over the persisted layout: per-partition weight total +
-    min physical row id. Returns ``([(pid, offset, min_mid)], total)``
-    with offsets as exclusive prefix sums in pid order (ascending pid
-    == ascending key range for repartitionByRange, so pid order IS key
-    order). The collect is |partitions| tuples, never row data."""
-    rows = (
-        part.groupBy("_pid")
-        .agg(F.sum(weight).alias("_w"), F.min("_mid").alias("_m"))
-        .collect()
+def _partition_stats(part: DataFrame, *aggs) -> dict[int, tuple]:
+    """One job over the persisted layout: ``pid -> (min physical row
+    id, *aggs)`` for every non-empty partition. Ascending pid ==
+    ascending key range for repartitionByRange, so pid order IS key
+    order. The collect is |partitions| tuples, never row data."""
+    rows = part.groupBy("_pid").agg(F.min("_mid"), *aggs).collect()
+    return {int(r[0]): tuple(r[1:]) for r in rows}
+
+
+def literal_at(values: dict[int, object], index: str = "_pid") -> Column:
+    """``values[index]`` read per row from a literal bigint array: a
+    driver-collected constant goes into the plan, not into a table to
+    join. O(1) per row at any size (a ``create_map`` lookup scans its
+    keys). Missing indexes (empty partitions) hold NULL; no row reads
+    them."""
+    size = max(values, default=-1) + 1
+    arr = F.array(*[F.lit(values.get(i)) for i in range(size)])
+    return arr.cast("array<bigint>")[F.col(index)]
+
+
+def _running_in_partition(order_cols: list[str]):
+    """Running frame over one range partition in ``order_cols`` order."""
+    return (
+        Window.partitionBy("_pid")
+        .orderBy(*[F.col(c) for c in order_cols])
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    stats, acc = [], 0
-    for r in sorted(rows, key=lambda r: r["_pid"]):
-        stats.append((int(r["_pid"]), acc, int(r["_m"])))
-        acc += int(r["_w"])
-    return stats, acc
 
 
-def _stats_dim(spark, stats: list):
-    """pid → (offset, min row id) as a broadcast two-phase-joinable
-    dim: the probe stays a zero-shuffle broadcast hash join."""
-    if not stats:
-        stats = [(0, 0, 0)]
-    dim = spark.createDataFrame(
-        stats, "_pid int, _offset bigint, _minmid bigint"
-    )
-    return F.broadcast(dim)
+def _exclusive_prefix(stats: dict[int, tuple], i: int = 1) -> dict:
+    """pid -> sum of column ``i`` over all earlier partitions."""
+    out, acc = {}, 0
+    for pid in sorted(stats):
+        out[pid] = acc
+        acc += int(stats[pid][i] or 0)
+    return out
 
 
-def _with_rank_col(part: DataFrame, stats: list, rank_col: str) -> DataFrame:
+def _with_rank_col(part: DataFrame, stats: dict, rank_col: str) -> DataFrame:
     """offset + (row id − partition min row id) + 1: exact global rank
     from pure projections over the persisted sorted layout."""
-    return (
-        part.join(_stats_dim(part.sparkSession, stats), "_pid")
-        .withColumn(
-            rank_col,
-            F.col("_offset") + (F.col("_mid") - F.col("_minmid")) + 1,
-        )
-        .drop("_pid", "_mid", "_offset", "_minmid")
-    )
+    offset = literal_at(_exclusive_prefix(stats))
+    minmid = literal_at({p: int(s[0]) for p, s in stats.items()})
+    return part.withColumn(
+        rank_col, offset + (F.col("_mid") - minmid) + 1
+    ).drop("_pid", "_mid")
 
 
 def with_global_rank(
@@ -110,7 +118,7 @@ def with_global_rank(
     """Exact 1-based global rank of every row under ``order_cols``
     (a total order; ties must be broken by the caller's key)."""
     part = _range_partitioned(df, order_cols, num_partitions)
-    stats, _ = _partition_stats(part, F.lit(1))
+    stats = _partition_stats(part, F.count(F.lit(1)))
     return _with_rank_col(part, stats, rank_col)
 
 
@@ -127,7 +135,8 @@ def with_global_ntile(
     ``n // k + 1`` rows, the rest ``n // k`` (ANSI ntile, identical in
     Spark and DuckDB)."""
     part = _range_partitioned(df, order_cols, num_partitions)
-    stats, n = _partition_stats(part, F.lit(1))
+    stats = _partition_stats(part, F.count(F.lit(1)))
+    n = sum(int(c) for _, c in stats.values())
     ranked = _with_rank_col(part, stats, "_grank")
     base, rem = n // k, n % k
     head = rem * (base + 1)  # rows covered by the (base+1)-sized tiles
@@ -165,40 +174,16 @@ def with_global_cumsum_multi(
     weight column. Same contract as the single-weight form: integer
     weights, total order, never SinglePartition."""
     part = _range_partitioned(df, order_cols, num_partitions)
-    rows = (
-        part.groupBy("_pid")
-        .agg(
-            *[F.sum(w).alias(f"_w{i}") for i, w in enumerate(weight_cols)],
-            F.min("_mid").alias("_m"),
-        )
-        .collect()
-    )
-    stats, accs = [], [0] * len(weight_cols)
-    for r in sorted(rows, key=lambda r: r["_pid"]):
-        stats.append((int(r["_pid"]), *accs))
-        accs = [
-            a + int(r[f"_w{i}"] or 0) for i, a in enumerate(accs)
-        ]
-    if not stats:
-        stats = [(0, *([0] * len(weight_cols)))]
-    schema = "_pid int, " + ", ".join(
-        f"_o{i} bigint" for i in range(len(weight_cols))
-    )
-    dim = F.broadcast(df.sparkSession.createDataFrame(stats, schema))
-    w = (
-        Window.partitionBy("_pid")
-        .orderBy(*[F.col(c) for c in order_cols])
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    out = part.join(dim, "_pid")
+    stats = _partition_stats(part, *[F.sum(w) for w in weight_cols])
+    w = _running_in_partition(order_cols)
+    out = part
     for i, wc in enumerate(weight_cols):
         out = out.withColumn(
             f"cum_{wc}",
-            F.sum(wc).over(w).cast("bigint") + F.col(f"_o{i}"),
+            F.sum(wc).over(w).cast("bigint")
+            + literal_at(_exclusive_prefix(stats, i + 1)),
         )
-    return out.drop(
-        "_pid", "_mid", *[f"_o{i}" for i in range(len(weight_cols))]
-    )
+    return out.drop("_pid", "_mid")
 
 
 def with_global_cumsum(
@@ -214,20 +199,13 @@ def with_global_cumsum(
     keyed exchange, never SinglePartition) and adds the partition's
     exclusive prefix total."""
     part = _range_partitioned(df, order_cols, num_partitions)
-    stats, _ = _partition_stats(part, F.col(weight_col))
-    w = (
-        Window.partitionBy("_pid")
-        .orderBy(*[F.col(c) for c in order_cols])
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        part.join(_stats_dim(df.sparkSession, stats), "_pid")
-        .withColumn(
-            cumsum_col,
-            F.sum(weight_col).over(w).cast("bigint") + F.col("_offset"),
-        )
-        .drop("_pid", "_mid", "_offset", "_minmid")
-    )
+    stats = _partition_stats(part, F.sum(weight_col))
+    w = _running_in_partition(order_cols)
+    return part.withColumn(
+        cumsum_col,
+        F.sum(weight_col).over(w).cast("bigint")
+        + literal_at(_exclusive_prefix(stats)),
+    ).drop("_pid", "_mid")
 
 
 def with_global_cummax(
@@ -243,40 +221,20 @@ def with_global_cummax(
     delay. Same distributed shape as ``with_global_cumsum``: range
     exchange on the order key, per-partition running max windowed BY
     PARTITION ID, and each partition folds in the exclusive prefix
-    max of all earlier partitions (a |partitions|-row driver fold
-    broadcast back — never row data, never SinglePartition).
+    max of all earlier partitions (a |partitions|-entry driver fold
+    read back as literals — never row data, never SinglePartition).
     ``F.greatest`` skips the NULL prefix of the first partition."""
     part = _range_partitioned(df, order_cols, num_partitions)
-    rows = (
-        part.groupBy("_pid")
-        .agg(F.max(value_col).alias("_mx"), F.min("_mid").alias("_m"))
-        .collect()
-    )
-    stats, run = [], None
-    for r in sorted(rows, key=lambda r: r["_pid"]):
-        stats.append((int(r["_pid"]), run, int(r["_m"])))
-        v = r["_mx"]
+    stats = _partition_stats(part, F.max(value_col))
+    premax, run = {}, None
+    for pid in sorted(stats):
+        premax[pid] = run
+        v = stats[pid][1]
         run = v if run is None or (v is not None and v > run) else run
-    if not stats:
-        stats = [(0, None, 0)]
-    dim = F.broadcast(
-        df.sparkSession.createDataFrame(
-            stats, "_pid int, _premax bigint, _minmid bigint"
-        )
-    )
-    w = (
-        Window.partitionBy("_pid")
-        .orderBy(*[F.col(c) for c in order_cols])
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        part.join(dim, "_pid")
-        .withColumn(
-            cummax_col,
-            F.greatest(
-                F.max(value_col).over(w).cast("bigint"),
-                F.col("_premax"),
-            ),
-        )
-        .drop("_pid", "_mid", "_premax", "_minmid")
-    )
+    w = _running_in_partition(order_cols)
+    return part.withColumn(
+        cummax_col,
+        F.greatest(
+            F.max(value_col).over(w).cast("bigint"), literal_at(premax)
+        ),
+    ).drop("_pid", "_mid")

@@ -386,8 +386,8 @@ def q_gini_customer_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     source_quota_cap is the enforcement half). G = 2*sum(r_i*x_i) /
     (n*sum(x)) - (n+1)/n over spend sorted ascending: the per-row
     global rank comes from operators/ranks.with_global_rank (range
-    exchange + broadcast offsets, never a SinglePartition window —
-    THE classic Gini scale-killer). Spend is micro-unit-quantized
+    exchange + literal per-partition offsets, never a SinglePartition
+    window — THE classic Gini scale-killer). Spend is micro-unit-quantized
     (x*1e6 as BIGINT, exact since x is DECIMAL(18,6)) so rank*spend
     products accumulate as DECIMAL(19,0)*DECIMAL(19,0) ->
     DECIMAL(38,0): exact and overflow-safe at 100 TB customer

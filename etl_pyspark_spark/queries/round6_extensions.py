@@ -16,7 +16,7 @@ from etl_pyspark_spark.queries.core import (
 from etl_pyspark_spark.queries.text_analysis import _WS_TOKENS_SQL
 from etl_pyspark_spark.queries._shared import _ORACLE_SF
 from etl_pyspark_spark.queries.eval_stats import _SKIP_HI, _SKIP_LO
-from etl_pyspark_spark.sources.io import read_parquet
+from etl_pyspark_spark.sources.io import literal_frame, read_parquet
 from etl_pyspark_spark.sources.layouts import (
     ensure_skipping_lineitem,
     skipping_lineitem_dir,
@@ -673,8 +673,8 @@ def q_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_pyspark_spark.dedup.shared import verified_pairs
 
     vp = verified_pairs(spark, sf_dir)
-    thr = spark.createDataFrame(
-        [(t,) for t in (0.5, 0.6, 0.7, 0.8, 0.9)], "threshold double"
+    thr = literal_frame(
+        spark, [(t,) for t in (0.5, 0.6, 0.7, 0.8, 0.9)], "threshold double"
     )
     surv = vp.join(
         F.broadcast(thr), F.col("jaccard") >= F.col("threshold")
@@ -1154,8 +1154,8 @@ def q_parquet_footer_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         for f in _os.listdir(dst)
         if f.endswith(".parquet")
     )
-    pdf = spark.createDataFrame(
-        [(p,) for p in paths], "path string"
+    pdf = literal_frame(
+        spark, [(p,) for p in paths], "path string"
     ).repartition(8, "path")
 
     def footers(batches):

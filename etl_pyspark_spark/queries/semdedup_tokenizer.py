@@ -16,6 +16,7 @@ from etl_pyspark_spark.queries.core import (
 from etl_pyspark_spark.queries.text_analysis import _WS_TOKENS_SQL, _ngram_sql
 from etl_pyspark_spark.queries.dedup_queries import _sql_cos
 from etl_pyspark_spark.queries.widening_r3 import q_sql_group_by_all
+from etl_pyspark_spark.sources.io import literal_frame
 
 # ---------------------------------------------------------------------------
 # Round 4: SemDeDup semantic dedup, substring span removal, corpus
@@ -620,8 +621,8 @@ def q_value_quantiles_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact discrete quantile PROFILE of events.value (P1/P25/P50/
     P75/P99) through operators/quantiles.exact_discrete_quantiles —
     the approx-bracketed exact rank search runs all five probes with
-    TWO corpus scans total (one for n + all brackets, one for all
-    below-bracket counts) plus per-probe bracket slivers; the oracle
+    TWO corpus scans total (one for n + all brackets, one aggregate
+    of the below-bracket counts and the per-probe slivers); the oracle
     computes the same order statistics the exhaustive way. Output is
     5 rows assembled driver-side from the (bounded) cut values —
     this is the engine's quantile API surface as a query."""
@@ -632,8 +633,8 @@ def q_value_quantiles_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_table(spark, sf_dir, "events")
     probs = [0.01, 0.25, 0.5, 0.75, 0.99]
     cuts = exact_discrete_quantiles(ev, "value", probs)
-    return spark.createDataFrame(
-        [(p, v) for p, v in zip(probs, cuts)], "prob double, value double"
+    return literal_frame(
+        spark, list(zip(probs, cuts)), "prob double, value double"
     )
 
 
@@ -1106,8 +1107,8 @@ def q_tokenizer_bpe_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = read_table(spark, sf_dir, "documents")
     rules, _ = bpe_learn(docs, n_merges=10)
-    return spark.createDataFrame(
-        rules, "step int, left string, right string, pair_count bigint"
+    return literal_frame(
+        spark, rules, "step int, left string, right string, pair_count bigint"
     )
 
 

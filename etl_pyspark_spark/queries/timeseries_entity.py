@@ -20,6 +20,7 @@ from etl_pyspark_spark.queries.graph_temporal import (
     _copurchase_edges_sql,
     _kcore_oracle,
 )
+from etl_pyspark_spark.sources.io import literal_frame
 
 @query(
     "timeseries_linear_interpolate",
@@ -1448,7 +1449,7 @@ def q_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.agg(F.count(F.lit(1)).cast("bigint").alias("n_total"))
     )
     b = F.broadcast(
-        spark.createDataFrame(_BENFORD_P, "first_digit int, p double")
+        literal_frame(spark, _BENFORD_P, "first_digit int, p double")
     )
     exp = F.col("n_total").cast("double") * F.col("p")
     dev = F.coalesce(F.col("n_obs"), F.lit(0)).cast("double") - exp

@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from etl_pyspark_spark.sources.io import literal_frame
+
 _PAIR_SCHEMA = T.StructType(
     [
         T.StructField("id_a", T.LongType()),
@@ -98,7 +100,8 @@ def block_cosine_pairs(
         (F.col(id_col) % num_blocks).cast("int").alias("blk"),
         cluster_expr.alias("cl"),
     )
-    pairs = spark.createDataFrame(
+    pairs = literal_frame(
+        spark,
         [(i, j) for i in range(num_blocks) for j in range(num_blocks) if i <= j],
         "bi int, bj int",
     ).withColumn("pair_id", F.col("bi") * num_blocks + F.col("bj"))

@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from etl_pyspark_spark.sources.io import literal_frame
+
 _TOPK_SCHEMA = T.StructType(
     [
         T.StructField("query_id", T.LongType()),
@@ -92,7 +94,7 @@ def ivf_topk(
     ]
     if not sample_rows:
         # empty corpus: no cells to probe, result is structurally empty
-        return corpus.sparkSession.createDataFrame([], _TOPK_SCHEMA)
+        return literal_frame(corpus.sparkSession, [], _TOPK_SCHEMA)
     sample = np.stack(sample_rows)
     # tiny corpora can have fewer rows than requested cells; clamp so
     # the no-replacement seed draw (and Lloyd) stay well-defined —

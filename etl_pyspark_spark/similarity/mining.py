@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_pyspark_spark.similarity.blockpairs import _BLOCK_ROWS
+from etl_pyspark_spark.sources.io import literal_frame
 
 _CAND_SCHEMA = T.StructType(
     [
@@ -78,7 +79,8 @@ def hard_negative_mine(
         # upholds the raise-over-silent-degrade contract.
         F.pmod(F.col(id_col), F.lit(num_blocks)).cast("int").alias("blk"),
     )
-    pairs = spark.createDataFrame(
+    pairs = literal_frame(
+        spark,
         [(i, j) for i in range(num_blocks) for j in range(num_blocks) if i <= j],
         "bi int, bj int",
     ).withColumn("pair_id", F.col("bi") * num_blocks + F.col("bj"))

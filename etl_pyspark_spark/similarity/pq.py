@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from etl_pyspark_spark.sources.io import literal_frame
+
 _TOPK_SCHEMA = T.StructType(
     [
         T.StructField("query_id", T.LongType()),
@@ -82,7 +84,7 @@ def pq_topk(
         .collect()
     ]
     if not sample_rows:
-        return corpus.sparkSession.createDataFrame([], _TOPK_SCHEMA)
+        return literal_frame(corpus.sparkSession, [], _TOPK_SCHEMA)
     sample = np.stack(sample_rows)
     sample = sample / (
         np.sqrt((sample * sample).sum(axis=1, keepdims=True)) + 1e-12
@@ -129,7 +131,7 @@ def pq_topk(
         F.col(vec_col).cast("array<double>").alias("qv"),
     ).collect()
     if not q_rows:
-        return corpus.sparkSession.createDataFrame([], _TOPK_SCHEMA)
+        return literal_frame(corpus.sparkSession, [], _TOPK_SCHEMA)
     q_ids = np.array([r["query_id"] for r in q_rows])
     Q = np.stack([r["qv"] for r in q_rows])
     Q = Q / (np.sqrt((Q * Q).sum(axis=1, keepdims=True)) + 1e-12)

@@ -184,7 +184,6 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
 _AUTOSIZE_ROWS_PER_PARTITION = 200_000
 _AUTOSIZE_MAX_PARTITIONS = 4096
 _FIXTURE_MAX_ROWS: dict[str, int] = {}
-_SHUFFLE_BASELINE: dict[str, int] = {}
 
 
 def _fixture_max_rows(sf_dir: str) -> int:
@@ -258,11 +257,15 @@ def _table_bytes(p: str) -> int:
 def autosize_shuffle_partitions(spark: SparkSession, sf_dir: str) -> int:
     """Set ``spark.sql.shuffle.partitions`` for this fixture's volume:
     ``clamp(session baseline, max_rows/200k, 4096)``. The baseline is
-    the value the session was BUILT with (captured on first call), so
-    alternating fixtures in one session re-derive per query — a 100x
-    query raises it, the next sf0.1 query drops it back, and AQE
-    coalesces any small case down for free. Returns the applied value
-    (0 when the session's conf cannot be read).
+    the session's own value, kept per session object with the value
+    this function last applied: while the conf still reads that value,
+    the baseline holds, so alternating fixtures in one session
+    re-derive per query — a 100x query raises it, the next sf0.1 query
+    drops it back, and AQE coalesces any small case down for free. A
+    conf that reads anything else was set by the caller, and becomes
+    the new baseline (a session's first call adopts its current
+    value). Returns the applied value (0 when the session's conf
+    cannot be read).
 
     Construct-then-execute-immediately assumption (r07 advice #4):
     the conf is set once at the query's start (the
@@ -275,15 +278,17 @@ def autosize_shuffle_partitions(spark: SparkSession, sf_dir: str) -> int:
     the next, so the assumption holds there; an interleaving caller
     should re-call this right before each action."""
     try:
-        app = spark.sparkContext.applicationId
         cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except Exception:
         return 0
-    base = _SHUFFLE_BASELINE.setdefault(app, cur)
+    base, applied = getattr(spark, "_graft_shuffle_sizing", (cur, cur))
+    if cur != applied:
+        base = cur
     need = _fixture_max_rows(sf_dir) // _AUTOSIZE_ROWS_PER_PARTITION
     target = max(base, min(_AUTOSIZE_MAX_PARTITIONS, need))
     if cur != target:
         spark.conf.set("spark.sql.shuffle.partitions", str(target))
+    spark._graft_shuffle_sizing = (base, target)
     return target
 
 
@@ -377,6 +382,28 @@ def gather(dfs: list[DataFrame]) -> DataFrame:
     if not dfs:
         raise ValueError("gather() needs at least one DataFrame")
     return reduce(lambda a, b: a.unionByName(b), dfs)
+
+
+def literal_frame(
+    spark: SparkSession, rows: list[tuple], ddl: str | StructType
+) -> DataFrame:
+    """A small driver-side table (``rows`` of tuples in ``ddl`` column
+    order) planned as a ``LocalTableScan``.
+
+    ``spark.createDataFrame(<python list>)`` plans a ``Scan ExistingRDD``
+    over a Python RDD: every job that reads it, or broadcasts it, starts
+    Python workers. An Arrow table goes to the JVM as data, so the plan
+    holds the rows themselves, also for empty ``rows``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = ddl if isinstance(ddl, StructType) else StructType.fromDDL(ddl)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def compact_small_files(

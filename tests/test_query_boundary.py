@@ -88,3 +88,26 @@ def test_boundary_calls_only_in_allowed_modules():
     # the prologue itself must still make both calls
     core = ast.parse((PKG / "queries" / "core.py").read_text())
     assert {c for c, _ in _calls(core, CALLERS)} == set(CALLERS)
+
+
+def test_query_keeps_callers_shuffle_partitions(spark, oracle_sf_dir):
+    """The shuffle sizing floors at the caller's own setting: a value
+    set on the session (or on a sibling ``newSession()``) after its
+    last query still holds after the next query's prologue."""
+    from etl_pyspark_spark.registry import QUERIES
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    QUERIES["filter_project"](spark, oracle_sf_dir)
+    s2 = spark.newSession()
+    try:
+        spark.conf.set(key, "64")
+        s2.conf.set(key, "200")
+        QUERIES["filter_project"](spark, oracle_sf_dir)
+        QUERIES["filter_project"](s2, oracle_sf_dir)
+        assert spark.conf.get(key) == "64"
+        assert s2.conf.get(key) == "200"
+    finally:
+        spark.conf.set(key, before)
+    QUERIES["filter_project"](spark, oracle_sf_dir)
+    assert spark.conf.get(key) == before

@@ -139,3 +139,70 @@ def test_global_cumsum_multi_empty_input(spark):
     out = with_global_cumsum_multi(df, ["value"], ["ca", "cb"])
     assert out.count() == 0
     assert {"cum_ca", "cum_cb"} <= set(out.columns)
+
+
+def _python_order_stats(rows, k):
+    """row_number, ntile(k), running sum and running max of ``w`` in
+    ``(key, w)`` order, computed in plain Python (ANSI ntile: the
+    first n % k tiles take one row more)."""
+    rows = sorted(rows)
+    n = len(rows)
+    base, rem = divmod(n, k)
+    out, run_sum, run_max = {}, 0, None
+    for i, (key, w) in enumerate(rows):
+        head = rem * (base + 1)
+        tile = i // (base + 1) + 1 if i < head else (i - head) // base + rem + 1
+        run_sum += w
+        run_max = w if run_max is None else max(run_max, w)
+        out[key] = (i + 1, tile, run_sum, run_max)
+    return out
+
+
+def test_order_statistics_edge_inputs(spark):
+    """All five operators on inputs with fewer rows than partitions
+    (3 rows into 8 range partitions), a single row and no rows match
+    the plain-Python running statistics."""
+    from etl_pyspark_spark.operators.ranks import (
+        with_global_cummax,
+        with_global_cumsum_multi,
+    )
+    from etl_pyspark_spark.sources.io import literal_frame
+
+    k = 2
+    for rows in ([(30, 5), (10, 7), (20, -2)], [(10, 4)], []):
+        df = literal_frame(spark, rows, "key bigint, w bigint")
+        want = _python_order_stats(rows, k)
+        got = {}
+        order, p = ["key"], 8
+        for col, out in (
+            ("rk", with_global_rank(df, order, "rk", num_partitions=p)),
+            ("t", with_global_ntile(df, order, k, "t", num_partitions=p)),
+            ("cs", with_global_cumsum(df, order, "w", "cs", num_partitions=p)),
+            ("cw", with_global_cumsum_multi(
+                df, order, ["w"], num_partitions=p
+            ).withColumnRenamed("cum_w", "cw")),
+            ("cm", with_global_cummax(df, order, "w", "cm", num_partitions=p)),
+        ):
+            assert out.columns == ["key", "w", col], out.columns
+            for r in out.collect():
+                got.setdefault(r["key"], {})[col] = r[col]
+        assert {
+            key: (g["rk"], g["t"], g["cs"], g["cm"]) for key, g in got.items()
+        } == want, rows
+        assert all(g["cw"] == g["cs"] for g in got.values())
+
+
+def test_partition_lookup_empty_partitions_read_null(spark):
+    """The per-partition literal array holds NULL for a partition id
+    with no stats (an empty range partition) and the value for each
+    other id."""
+    from etl_pyspark_spark.operators.ranks import literal_at
+
+    df = spark.range(4).select(F.col("id").cast("int").alias("_pid"))
+    got = {
+        r["_pid"]: r["v"]
+        for r in df.where(F.col("_pid") != 3)
+        .select("_pid", literal_at({0: 10, 2: 2**40}).alias("v"))
+        .collect()
+    }
+    assert got == {0: 10, 1: None, 2: 2**40}
